@@ -28,14 +28,17 @@ def _banner(step: str) -> None:
 
 def main() -> int:
     from financial_data_pipeline_spark import get_spark
-    from financial_data_pipeline_spark.operators.cleaning import clean_ohlcv
+    from financial_data_pipeline_spark.operators.cleaning import (
+        cleaned_from_staged,
+        stage_ohlcv,
+    )
     from financial_data_pipeline_spark.operators.indicators import calculate_all
     from financial_data_pipeline_spark.operators.resample import resample_ohlcv
     from financial_data_pipeline_spark.operators.splitter import (
         chronological_split,
     )
     from financial_data_pipeline_spark.operators.stats import quality_score
-    from financial_data_pipeline_spark.plans.report import validation_report
+    from financial_data_pipeline_spark.plans.report import staged_report
     from financial_data_pipeline_spark.sources.laketable import LakeTable
     from financial_data_pipeline_spark.sources.readers import read_archive
     from financial_data_pipeline_spark.sources.sinks import write_archive
@@ -69,15 +72,18 @@ def main() -> int:
         raw.select("symbol", "timestamp", "open", "high", "low", "close", "volume").show(3)
 
         # 2. Clean — the reference's 13-step validate_and_clean as ONE
-        # lazy plan (dedup, coerce, impute, IQR clip, OHLC repair)
-        _banner("2. clean: 13-step pipeline, one lazy plan")
-        clean = clean_ohlcv(raw, mode="repair").cache()
+        # lazy staged frame (dedup, coerce, impute, IQR clip, OHLC
+        # repair), persisted once: the cleaned rows and the report
+        # both read it
+        _banner("2. clean: 13-step pipeline, one staged frame")
+        staged = stage_ohlcv(raw, mode="repair").cache()
+        clean = cleaned_from_staged(staged)
         n_clean = clean.count()
         print(f"rows after clean: {n_clean} (removed {n_raw - n_clean})")
 
         # 3. Validate — counter report + weighted quality score
         _banner("3. validate: counters + weighted quality score")
-        report = validation_report(raw)
+        report = staged_report(staged)
         print(
             {
                 k: report[k]

@@ -3,23 +3,31 @@
 Re-expresses the reference's fixed 13-step ``validate_and_clean``
 sequence (``src/data_etl/processing/data_cleaner.py:56-173``) and the
 three validator variants (``validation/{simple_validator,
-data_validator,data_processor}.py``) as one composable transform suite
-with a strictness knob:
+data_validator,data_processor}.py``) with a strictness knob:
 
 - ``mode="strict"``  → invalid rows are dropped (simple_validator
   semantics, ``simple_validator.py:74-91``)
 - ``mode="repair"``  → invalid rows are repaired/clipped
   (EnhancedDataValidator semantics, ``data_cleaner.py:218-269``)
 
-Every transform is ``DataFrame -> DataFrame``, lazy, and partitions all
-window work by ``symbol`` so the plan scales horizontally: no global
-shuffles except where the reference's semantics genuinely demand global
-state (none do — every cleaning rule is per-symbol or per-row).
+The reference returns the cleaned frame and its report from one pass.
+Here ONE staged frame (:func:`stage_ohlcv`) runs the whole sequence and
+keeps one row per input row, with every stage's flags and values as
+columns. :func:`clean_ohlcv` filters it to the surviving rows; the
+validation report (:mod:`financial_data_pipeline_spark.plans.report`)
+aggregates the same frame, so the rule chain exists once and a caller
+that wants both (``plans.pipeline``) persists the staged frame once.
 
-Stage ORDER IS SEMANTICALLY SIGNIFICANT (SURVEY.md §4.2): dedup →
-ts-convert → coerce → impute → drop-negatives → IQR-clip → OHLC-repair;
-e.g. quantiles are computed after negative-row removal. ``clean_ohlcv``
-freezes that order.
+Stage ORDER IS SEMANTICALLY SIGNIFICANT (SURVEY.md §4.2): ts-convert →
+dedup → coerce → impute → drop-negatives → IQR-clip → OHLC-repair;
+e.g. quantiles are computed after negative-row removal.
+
+Each row rule is SQL text written once (``_*_sql``); the staged frame
+and the Column-form building blocks (``drop_negative_rows``,
+``iqr_clip``, ``repair_ohlc``, …) both build from it. Every transform
+is ``DataFrame -> DataFrame``, lazy, and partitions all window work by
+``symbol``: no global shuffles (every cleaning rule is per-symbol or
+per-row).
 """
 
 from __future__ import annotations
@@ -85,6 +93,117 @@ def dedup_keep_first(
 
 
 # ---------------------------------------------------------------------------
+# Row rules as SQL text. Each rule is written once: the Column-form
+# operators below and the staged frame of ``stage_ohlcv`` both build
+# from these strings (one ``F.expr`` is one py4j round trip; the Column
+# API pays one per expression node).
+# ---------------------------------------------------------------------------
+
+_INF_TOKENS = "'inf', '+inf', '-inf', 'infinity', '+infinity', '-infinity'"
+
+
+def _q(c: str) -> str:
+    return f"`{c}`"
+
+
+def _coerce_sql(c: str, is_string: bool) -> str:
+    cast = f"CAST({c} AS DOUBLE)"
+    if not is_string:
+        return cast
+    return (
+        f"CASE WHEN abs({cast}) = CAST('Infinity' AS DOUBLE) THEN "
+        f"CASE WHEN lower(trim({c})) IN ({_INF_TOKENS}) THEN {cast} END "
+        f"ELSE {cast} END"
+    )
+
+
+def _nonneg_sql(cols: list[str]) -> str:
+    return " AND ".join(f"({c} IS NULL OR {c} >= 0)" for c in cols)
+
+
+def _positive_sql(o: str, h: str, l: str, c: str, v: str) -> str:
+    return f"({v} >= 0 AND {o} > 0 AND {h} > 0 AND {l} > 0 AND {c} > 0)"
+
+
+def _consistent_sql(o: str, h: str, l: str, c: str, tolerance: float) -> str:
+    hi = f"({h} * {float(1.0 + tolerance)!r}D)"
+    lo = f"({l} * {float(1.0 - tolerance)!r}D)"
+    return (
+        f"({hi} >= {l} AND {hi} >= {o} AND {hi} >= {c} "
+        f"AND {lo} <= {o} AND {lo} <= {c})"
+    )
+
+
+def _repair_sql(o: str, h: str, l: str, c: str, tolerance: float) -> dict:
+    bad = f"NOT {_consistent_sql(o, h, l, c, tolerance)}"
+    return {
+        "high": f"CASE WHEN {bad} THEN greatest({o}, {c}, {h}) ELSE {h} END",
+        "low": f"CASE WHEN {bad} THEN least({o}, {c}, {l}) ELSE {l} END",
+    }
+
+
+def _iqr_fence_sql(q1: str, q3: str, factor: float) -> tuple[str, str]:
+    f = f"{float(factor)!r}D"
+    return f"({q1} - {f} * ({q3} - {q1}))", f"({q3} + {f} * ({q3} - {q1}))"
+
+
+def _clip_sql(v: str, q1: str, q3: str, factor: float) -> str:
+    lo, hi = _iqr_fence_sql(q1, q3, factor)
+    return f"CASE WHEN {v} IS NOT NULL THEN greatest({lo}, least({hi}, {v})) END"
+
+
+def _quartiles_sql(v: str, by: str | None) -> dict:
+    """Exact Q1 / Q3 of ``v`` (linear interpolation, as pandas
+    ``quantile`` and DuckDB ``quantile_cont``) as whole-partition window
+    aggregates over ``by`` (all rows when None): no aggregate joined
+    back, so a frame already partitioned by ``by`` is not shuffled
+    again. Rows without a ``by`` key get none, so the clip leaves them
+    as they are."""
+    out = {}
+    for k, q in (("q1", 0.25), ("q3", 0.75)):
+        e = f"percentile({v}, {q}D) OVER ({f'PARTITION BY {by}' if by else ''})"
+        out[k] = f"CASE WHEN {by} IS NOT NULL THEN {e} END" if by else e
+    return out
+
+
+def _over(partition_by: list[str], order: str, frame_end: str) -> str:
+    part = f"PARTITION BY {', '.join(partition_by)} " if partition_by else ""
+    return (
+        f"OVER ({part}ORDER BY {order} "
+        f"ROWS BETWEEN UNBOUNDED PRECEDING AND {frame_end})"
+    )
+
+
+def _fill_sql(v: str, mask: str, partition_by: list[str], order: str) -> str:
+    """Last non-null ``v`` of a ``mask`` row at or before this one in
+    ``order``: a forward fill for an ascending order, a backward fill
+    for a descending one. Backward fills run over the REVERSED sort
+    with a preceding frame: Spark evaluates unbounded-FOLLOWING
+    aggregate frames by re-scanning the tail for every row (O(n²) per
+    partition), the preceding frame in one incremental pass."""
+    return f"last(CASE WHEN {mask} THEN {v} END, true) " + _over(
+        partition_by, order, "CURRENT ROW"
+    )
+
+
+def _interpolate_sql(v: str, mask: str, partition_by: list[str], ts: str) -> str:
+    t = f"CAST(unix_micros({ts}) AS DOUBLE)"
+    mv = f"CASE WHEN {mask} THEN {v} END"
+    mt = f"CASE WHEN {mask} AND {v} IS NOT NULL THEN {t} END"
+    # strictly-after lookups over the reversed sort (see _fill_sql)
+    wp = _over(partition_by, ts, "1 PRECEDING")
+    wn = _over(partition_by, f"{ts} DESC", "1 PRECEDING")
+    pv, pt = f"last({mv}, true) {wp}", f"last({mt}, true) {wp}"
+    nv, nt = f"last({mv}, true) {wn}", f"last({mt}, true) {wn}"
+    return (
+        f"CASE WHEN {v} IS NOT NULL THEN {v} "
+        f"WHEN {pv} IS NULL THEN {nv} "  # head run → backfill
+        f"WHEN {nv} IS NULL THEN {pv} "  # tail run → forward-fill
+        f"ELSE {pv} + ({nv} - {pv}) * ({t} - {pt}) / ({nt} - {pt}) END"
+    )
+
+
+# ---------------------------------------------------------------------------
 # Type coercion / timestamp normalization (F1, F2, P9)
 # ---------------------------------------------------------------------------
 
@@ -101,18 +220,9 @@ def coerce_numeric(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     infinity literal become null."""
     cols = cols or [c for c in OHLCV_COLUMNS if c in df.columns]
     dtypes = dict(df.dtypes)
-    updates = {}
-    for c in cols:
-        cast = F.col(c).cast("double")
-        if dtypes.get(c) == "string":
-            inf_token = F.lower(F.trim(F.col(c))).isin(
-                "inf", "+inf", "-inf", "infinity", "+infinity", "-infinity"
-            )
-            cast = F.when(
-                F.abs(cast) == F.lit(float("inf")), F.when(inf_token, cast)
-            ).otherwise(cast)
-        updates[c] = cast
-    return df.withColumns(updates)
+    return df.withColumns(
+        {c: F.expr(_coerce_sql(_q(c), dtypes.get(c) == "string")) for c in cols}
+    )
 
 
 def normalize_timestamp(
@@ -121,8 +231,7 @@ def normalize_timestamp(
     """Normalize ``ts`` to a UTC timestamp column (``data_cleaner.py:175-189``).
 
     Numeric / numeric-string input is treated as epoch in ``epoch_unit``;
-    other strings parse as datetime literals; invalid → null (dropped by
-    ``drop_invalid_timestamps``).
+    other strings parse as datetime literals; invalid → null.
     """
     dtype = dict(df.dtypes)[ts]
     col = F.col(ts)
@@ -138,11 +247,6 @@ def normalize_timestamp(
     return df.withColumn(ts, out)
 
 
-def drop_invalid_timestamps(df: DataFrame, ts: str = "timestamp") -> DataFrame:
-    """Drop rows whose timestamp failed to parse (``data_cleaner.py:663-688``)."""
-    return df.na.drop(subset=[ts])
-
-
 # ---------------------------------------------------------------------------
 # Imputation (F4): ffill then bfill per symbol in time order
 # ---------------------------------------------------------------------------
@@ -152,6 +256,27 @@ def _order_cols(order_by) -> list:
     return [order_by] if isinstance(order_by, str) else list(order_by)
 
 
+def _impute(
+    df: DataFrame, cols: dict, method: str, mask: str, partition_by: list[str], ts: str
+) -> DataFrame:
+    """Set each output column of ``cols`` (output name → source SQL) to
+    its source imputed from the ``mask`` rows: ``"ffill"`` = ffill then
+    bfill (F4), ``"interpolate"`` = time-weighted interpolation."""
+    if method == "interpolate":
+        return df.withColumns(
+            {
+                o: F.expr(_interpolate_sql(v, mask, partition_by, ts))
+                for o, v in cols.items()
+            }
+        )
+    df = df.withColumns(
+        {o: F.expr(_fill_sql(v, mask, partition_by, ts)) for o, v in cols.items()}
+    )
+    return df.withColumns(
+        {o: F.expr(_fill_sql(_q(o), mask, partition_by, f"{ts} DESC")) for o in cols}
+    )
+
+
 def ffill(
     df: DataFrame,
     cols: list[str],
@@ -159,42 +284,21 @@ def ffill(
     order_by="timestamp",
 ) -> DataFrame:
     """Forward-fill nulls (``fillna(method="ffill")``, ``data_cleaner.py:191-205``)."""
-    w = (
-        Window.partitionBy(*partition_by)
-        .orderBy(*_order_cols(order_by))
-        .rowsBetween(Window.unboundedPreceding, 0)
+    part = [_q(p) for p in partition_by]
+    order = ", ".join(_q(o) for o in _order_cols(order_by))
+    return df.withColumns(
+        {c: F.expr(_fill_sql(_q(c), "true", part, order)) for c in cols}
     )
-    return df.withColumns({c: F.last(c, ignorenulls=True).over(w) for c in cols})
-
-
-def bfill(
-    df: DataFrame,
-    cols: list[str],
-    partition_by: list[str] = ("symbol",),
-    order_by="timestamp",
-) -> DataFrame:
-    """Backward-fill nulls (``fillna(method="bfill")``).
-
-    Evaluated as ``last(ignorenulls)`` over the REVERSED sort with an
-    unbounded-PRECEDING frame: Spark computes unbounded-FOLLOWING
-    aggregate frames by re-scanning the tail for every row (O(n²) per
-    partition), while the preceding frame is one incremental pass —
-    identical results, linear cost (same device as
-    ``asof.asof_join``'s forward fill)."""
-    w = (
-        Window.partitionBy(*partition_by)
-        .orderBy(*[F.col(c).desc() for c in _order_cols(order_by)])
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return df.withColumns({c: F.last(c, ignorenulls=True).over(w) for c in cols})
 
 
 def impute_ffill_bfill(
     df: DataFrame, cols: list[str] | None = None, partition_by: list[str] = ("symbol",)
 ) -> DataFrame:
-    """ffill → bfill per numeric column (``data_cleaner.py:191-205``)."""
+    """ffill → bfill per numeric column in time order
+    (``data_cleaner.py:191-205``)."""
     cols = cols or [c for c in OHLCV_COLUMNS if c in df.columns]
-    return bfill(ffill(df, cols, partition_by), cols, partition_by)
+    part = [_q(p) for p in partition_by]
+    return _impute(df, {c: _q(c) for c in cols}, "ffill", "true", part, "`timestamp`")
 
 
 def interpolate_linear(
@@ -217,37 +321,8 @@ def interpolate_linear(
     ordering — a single shuffle for any number of columns.
     """
     cols = cols or [c for c in OHLCV_COLUMNS if c in df.columns]
-    t_us = F.unix_micros(F.col(ts)).cast("double")
-    wp = (
-        Window.partitionBy(*partition_by)
-        .orderBy(ts)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # next-known lookups run over the REVERSED sort with a preceding
-    # frame (strictly-before in reversed order = strictly-after in time)
-    # — unbounded-FOLLOWING aggregate frames are O(n²) in Spark (see
-    # bfill).
-    wn = (
-        Window.partitionBy(*partition_by)
-        .orderBy(F.col(ts).desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    updates = {}
-    for c in cols:
-        v = F.col(c)
-        known_t = F.when(v.isNotNull(), t_us)
-        pv = F.last(v, ignorenulls=True).over(wp)
-        pt = F.last(known_t, ignorenulls=True).over(wp)
-        nv = F.last(v, ignorenulls=True).over(wn)
-        nt = F.last(known_t, ignorenulls=True).over(wn)
-        interp = pv + (nv - pv) * (t_us - pt) / (nt - pt)
-        updates[c] = (
-            F.when(v.isNotNull(), v)
-            .when(pv.isNull(), nv)  # head run → backfill
-            .when(nv.isNull(), pv)  # tail run → forward-fill
-            .otherwise(interp)
-        )
-    return df.withColumns(updates)
+    part = [_q(p) for p in partition_by]
+    return _impute(df, {c: _q(c) for c in cols}, "interpolate", "true", part, _q(ts))
 
 
 # ---------------------------------------------------------------------------
@@ -258,11 +333,7 @@ def interpolate_linear(
 def drop_negative_rows(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """Drop rows with any negative numeric value (``data_cleaner.py:207-216``)."""
     cols = cols or [c for c in OHLCV_COLUMNS if c in df.columns]
-    cond = None
-    for c in cols:
-        term = F.col(c).isNull() | (F.col(c) >= 0)
-        cond = term if cond is None else (cond & term)
-    return df.filter(cond)
+    return df.filter(F.expr(_nonneg_sql([_q(c) for c in cols])))
 
 
 def nullify_negatives(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -280,10 +351,7 @@ def ohlc_consistent(tolerance: float = 0.0) -> Column:
     low <= open/close. With ``tolerance`` t (``data_cleaner.py:238-269``,
     default 5% there): high*(1+t) >= x and low*(1-t) <= x.
     """
-    h, l, o, c = (F.col(x) for x in ("high", "low", "open", "close"))
-    hi = h * (1.0 + tolerance)
-    lo = l * (1.0 - tolerance)
-    return (hi >= l) & (hi >= o) & (hi >= c) & (lo <= o) & (lo <= c)
+    return F.expr(_consistent_sql("open", "high", "low", "close", tolerance))
 
 
 def filter_valid_ohlc(df: DataFrame, tolerance: float = 0.0) -> DataFrame:
@@ -293,29 +361,18 @@ def filter_valid_ohlc(df: DataFrame, tolerance: float = 0.0) -> DataFrame:
 
 def filter_positive_prices(df: DataFrame) -> DataFrame:
     """Positive prices, non-negative volume (``simple_validator.py:74-81``)."""
-    cond = F.col("volume") >= 0
-    for c in PRICE_COLUMNS:
-        cond = cond & (F.col(c) > 0)
-    return df.filter(cond)
+    return df.filter(F.expr(_positive_sql("open", "high", "low", "close", "volume")))
 
 
 def repair_ohlc(df: DataFrame, tolerance: float = 0.0) -> DataFrame:
     """Repair inconsistent rows: ``high := max(open,close,high)``,
     ``low := min(open,close,low)`` (``data_cleaner.py:251-263``)."""
-    bad = ~ohlc_consistent(tolerance)
-    return df.withColumns(
-        {
-            "high": F.when(bad, F.greatest("open", "close", "high")).otherwise(
-                F.col("high")
-            ),
-            "low": F.when(bad, F.least("open", "close", "low")).otherwise(F.col("low")),
-        }
-    )
+    fixed = _repair_sql("open", "high", "low", "close", tolerance)
+    return df.withColumns({c: F.expr(e) for c, e in fixed.items()})
 
 
 # ---------------------------------------------------------------------------
-# IQR clip (F5 + A6) — aggregate-then-apply staging (2 jobs by necessity:
-# quantiles are data-dependent scalars; SURVEY §4.2)
+# IQR clip (F5 + A6)
 # ---------------------------------------------------------------------------
 
 
@@ -326,36 +383,23 @@ def iqr_clip(
     per_symbol: bool = True,
 ) -> DataFrame:
     """Winsorize outliers to ``[Q1 - f*IQR, Q3 + f*IQR]``
-    (``data_cleaner.py:218-236``).
-
-    Exact percentiles (linear interpolation — matches pandas
-    ``quantile`` and DuckDB ``quantile_cont``). Implemented as a
-    broadcast join of the tiny per-symbol bounds table against the fact
-    — no second shuffle of the fact table.
-    """
+    (``data_cleaner.py:218-236``), quartiles per symbol
+    (:func:`_quartiles_sql`)."""
     cols = cols or [c for c in OHLCV_COLUMNS if c in df.columns]
-    keys = ["symbol"] if per_symbol and "symbol" in df.columns else []
-    aggs = []
-    for c in cols:
-        aggs += [
-            F.percentile(F.col(c), F.lit(0.25)).alias(f"__q1_{c}"),
-            F.percentile(F.col(c), F.lit(0.75)).alias(f"__q3_{c}"),
-        ]
-    bounds = df.groupBy(*keys).agg(*aggs)
-    joined = (
-        df.join(F.broadcast(bounds), on=keys, how="left")
-        if keys
-        else df.crossJoin(F.broadcast(bounds))
+    by = "symbol" if per_symbol and "symbol" in df.columns else None
+    out = df.withColumns(
+        {
+            f"__{k}_{c}": F.expr(e)
+            for c in cols
+            for k, e in _quartiles_sql(_q(c), by).items()
+        }
     )
-    updates = {}
-    for c in cols:
-        q1, q3 = F.col(f"__q1_{c}"), F.col(f"__q3_{c}")
-        iqr = q3 - q1
-        lower, upper = q1 - factor * iqr, q3 + factor * iqr
-        updates[c] = F.when(
-            F.col(c).isNotNull(), F.greatest(lower, F.least(upper, F.col(c)))
-        )
-    out = joined.withColumns(updates)
+    out = out.withColumns(
+        {
+            c: F.expr(_clip_sql(_q(c), _q(f"__q1_{c}"), _q(f"__q3_{c}"), factor))
+            for c in cols
+        }
+    )
     return out.drop(*[f"__{q}_{c}" for c in cols for q in ("q1", "q3")])
 
 
@@ -402,15 +446,147 @@ def zscore_outlier_clean(
             ).otherwise(F.col(volume_col))
         }
     )
-    joined = ffill(joined, price_cols, keys or [F.lit(1)])
+    joined = ffill(joined, price_cols, keys)
     drop = [f"__mu_{c}" for c in price_cols + [volume_col]]
     drop += [f"__sd_{c}" for c in price_cols + [volume_col]]
     return joined.drop(*drop, "__med_vol")
 
 
 # ---------------------------------------------------------------------------
-# Full cleaning pipeline (E1 step 4) — frozen stage order
+# The staged frame and the full cleaning pipeline (E1 step 4) — frozen
+# stage order
 # ---------------------------------------------------------------------------
+
+
+def stage_ohlcv(
+    df: DataFrame,
+    mode: str = "repair",
+    epoch_unit: str = "s",
+    iqr_factor: float = 1.5,
+    price_tolerance: float = 0.0,
+    impute_method: str = "ffill",
+) -> DataFrame:
+    """The 13-step ``validate_and_clean`` sequence
+    (``data_cleaner.py:56-173``) as ONE lazy frame with one row per
+    input row, each stage's effect carried as per-row columns.
+
+    lowercase → require → ts-normalize → keep-first dedup → numeric
+    coerce → impute → drop negatives → IQR clip → OHLC repair (repair
+    mode) or drop (strict mode). The input's columns come first
+    (lowercased, ``symbol`` added if missing, ``timestamp`` normalized,
+    OHLCV holding the FINAL cleaned values), then:
+
+    - ``__dup``: a later row of a (symbol, timestamp) tie;
+      ``__kept``: valid timestamp and not a dup
+    - ``__c_<col>``: coerced value
+    - ``__kept2``: kept and no imputed value negative (imputation
+      reads the kept rows only, through masked windows: the dropped
+      rows stay in the frame but never feed a fill)
+    - ``__o_<col>``: imputed value outside the IQR fence of the
+      ``__kept2`` rows
+    - ``__bad``: OHLC-inconsistent after the clip, before repair
+    - ``__final``: the row survives cleaning
+
+    Every window, the quartiles included, partitions by ``symbol``:
+    one shuffle for the whole frame. :func:`clean_ohlcv` is
+    this frame filtered to ``__final``, and
+    :mod:`financial_data_pipeline_spark.plans.report` aggregates it
+    into the validation report, so the rules exist once.
+    """
+    if mode not in ("repair", "strict"):
+        raise ValueError(f"mode must be 'repair' or 'strict', got {mode!r}")
+    if impute_method not in ("ffill", "interpolate"):
+        raise ValueError(
+            f"impute_method must be 'ffill' or 'interpolate', got {impute_method!r}"
+        )
+    df = require_columns(lowercase_columns(df))
+    if "symbol" not in df.columns:
+        df = df.withColumn("symbol", F.lit("UNKNOWN"))
+    df = normalize_timestamp(df, epoch_unit=epoch_unit)
+    # clean_ohlcv's column order: repair mode leads with symbol (where
+    # the quartile join USING symbol of earlier releases put it), strict
+    # mode keeps the input order
+    base = df.columns
+    if mode == "repair":
+        base = ["symbol", *[c for c in base if c != "symbol"]]
+    strings = {c for c, t in df.dtypes if t == "string"}
+    cols, part = OHLCV_COLUMNS, ["symbol"]
+
+    lag = "lag(timestamp) OVER (PARTITION BY symbol ORDER BY timestamp)"
+    out = df.withColumns(
+        {"__dup": F.expr(f"coalesce(timestamp = {lag}, false)")}
+        | {f"__c_{c}": F.expr(_coerce_sql(c, c in strings)) for c in cols}
+    ).withColumn("__kept", F.expr("timestamp IS NOT NULL AND NOT __dup"))
+    # "ffill" = reference parity (ffill→bfill, data_cleaner.py:191-205);
+    # "interpolate" = the config option the reference names but never
+    # implements (config_manager.py:49)
+    imputed = {f"__i_{c}": f"__c_{c}" for c in cols}
+    out = _impute(out, imputed, impute_method, "__kept", part, "timestamp")
+    nonneg = _nonneg_sql([f"__i_{c}" for c in cols])
+    out = out.withColumn("__kept2", F.expr(f"__kept AND {nonneg}"))
+
+    # quartiles of the __kept2 rows, over the symbol partitioning the
+    # windows above already have (an aggregate joined back would
+    # recompute those windows in a second branch)
+    out = out.withColumns(
+        {
+            f"__{k}_{c}": F.expr(e)
+            for c in cols
+            for k, e in _quartiles_sql(
+                f"CASE WHEN __kept2 THEN __i_{c} END", "symbol"
+            ).items()
+        }
+    )
+    fences = {c: _iqr_fence_sql(f"__q1_{c}", f"__q3_{c}", iqr_factor) for c in cols}
+    out = out.withColumns(
+        {
+            f"__o_{c}": F.expr(f"__i_{c} < {lo} OR __i_{c} > {hi}")
+            for c, (lo, hi) in fences.items()
+        }
+        | {
+            f"__f_{c}": F.expr(
+                _clip_sql(f"__i_{c}", f"__q1_{c}", f"__q3_{c}", iqr_factor)
+                if mode == "repair"
+                else f"__i_{c}"
+            )
+            for c in cols
+        }
+    )
+    o, h, l, c_ = (f"__f_{x}" for x in ("open", "high", "low", "close"))
+    consistent = _consistent_sql(o, h, l, c_, price_tolerance)
+    final = {"__bad": F.expr(f"NOT {consistent}")}
+    if mode == "repair":
+        fixed = _repair_sql(o, h, l, c_, price_tolerance)
+        final |= {f"__f_{x}": F.expr(e) for x, e in fixed.items()}
+        final["__final"] = F.col("__kept2")
+    else:
+        # strict: drop positive-price failures, OHLC violations and
+        # remaining nulls instead of clipping and repairing
+        positive = _positive_sql(o, h, l, c_, "__f_volume")
+        no_null = " AND ".join(f"__f_{x} IS NOT NULL" for x in cols)
+        final["__final"] = F.expr(
+            f"__kept2 AND coalesce({positive} AND {consistent} AND {no_null}, false)"
+        )
+    out = out.withColumns(final)
+    return out.select(
+        *[F.expr(f"__f_{x} AS {x}") if x in cols else x for x in base],
+        "__dup",
+        "__kept",
+        *[f"__c_{c}" for c in cols],
+        "__kept2",
+        *[f"__o_{c}" for c in cols],
+        "__bad",
+        "__final",
+    )
+
+
+def cleaned_from_staged(staged: DataFrame, add_time_features: bool = True) -> DataFrame:
+    """The surviving rows of a :func:`stage_ohlcv` frame, projected to
+    the input's columns (+ hour / day_of_week / month / year)."""
+    out = staged.filter("__final").select(
+        *staged.columns[: staged.columns.index("__dup")]
+    )
+    return with_time_features(out) if add_time_features else out
 
 
 def clean_ohlcv(
@@ -422,48 +598,15 @@ def clean_ohlcv(
     add_time_features: bool = True,
     impute_method: str = "ffill",
 ) -> DataFrame:
-    """The 13-step ``validate_and_clean`` sequence
-    (``data_cleaner.py:56-173``) as one lazy plan.
-
-    lowercase → require → ts-normalize → drop-bad-ts → keep-first dedup
-    → numeric coerce → impute → drop negatives → IQR clip → OHLC
-    repair/drop → time features. Report counters are computed separately
-    by :mod:`financial_data_pipeline_spark.plans.report` as aggregates
-    over the before/after plans.
-    """
-    if mode not in ("repair", "strict"):
-        raise ValueError(f"mode must be 'repair' or 'strict', got {mode!r}")
-    df = lowercase_columns(df)
-    df = require_columns(df)
-    if "symbol" not in df.columns:
-        df = df.withColumn("symbol", F.lit("UNKNOWN"))
-    if impute_method not in ("ffill", "interpolate"):
-        raise ValueError(
-            f"impute_method must be 'ffill' or 'interpolate', got {impute_method!r}"
-        )
-    df = normalize_timestamp(df, epoch_unit=epoch_unit)
-    df = drop_invalid_timestamps(df)
-    df = dedup_keep_first(df, keys=["symbol", "timestamp"], order_by=["timestamp"])
-    df = coerce_numeric(df)
-    # "ffill" = reference parity (ffill→bfill, data_cleaner.py:191-205);
-    # "interpolate" = the config option the reference names but never
-    # implements (config_manager.py:49)
-    df = (
-        impute_ffill_bfill(df)
-        if impute_method == "ffill"
-        else interpolate_linear(df)
+    """The cleaned frame of the 13-step ``validate_and_clean`` sequence
+    (``data_cleaner.py:56-173``) as one lazy plan: the staged frame of
+    :func:`stage_ohlcv` filtered to its surviving rows. The validation
+    report over the same input aggregates that same staged frame
+    (:mod:`financial_data_pipeline_spark.plans.report`)."""
+    staged = stage_ohlcv(
+        df, mode, epoch_unit, iqr_factor, price_tolerance, impute_method
     )
-    df = drop_negative_rows(df)
-    if mode == "repair":
-        df = iqr_clip(df, factor=iqr_factor)
-        df = repair_ohlc(df, tolerance=price_tolerance)
-    else:
-        df = filter_positive_prices(df)
-        df = filter_valid_ohlc(df, tolerance=price_tolerance)
-        df = df.na.drop(subset=OHLCV_COLUMNS)
-    if add_time_features:
-        df = with_time_features(df)
-    return df
+    return cleaned_from_staged(staged, add_time_features)
 
 
 def mad_outlier_flags(

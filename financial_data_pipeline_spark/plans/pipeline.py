@@ -29,7 +29,7 @@ from financial_data_pipeline_spark.metadata import (
 from financial_data_pipeline_spark.operators import cleaning, normalize as norm
 from financial_data_pipeline_spark.operators import resample as rs
 from financial_data_pipeline_spark.operators import splitter
-from financial_data_pipeline_spark.plans.report import validation_report
+from financial_data_pipeline_spark.plans.report import staged_report
 from financial_data_pipeline_spark.sources import sinks
 
 
@@ -88,24 +88,30 @@ def run_pipeline_single(
     (``crypto_pipeline.py:480-489``): dataset names → row counts, plus
     written paths. Everything up to the sinks is one lazy plan.
     """
-    cleaned = cleaning.clean_ohlcv(
+    # ONE staged frame (every cleaning stage's flags and values, one
+    # row per input row), persisted once: the full dataset, the splits,
+    # the resamples, the metadata and the report all derive from it.
+    staged = cleaning.stage_ohlcv(
         source,
         mode=config.clean_mode,
         price_tolerance=config.price_tolerance,
         impute_method=config.impute_method,
-    )
+    ).cache()
+    cleaned = cleaning.cleaned_from_staged(staged)
     if config.normalize_method:
         cleaned = norm.normalize(
             cleaned, config.normalize_cols, method=config.normalize_method
         )
-    # Several datasets read the cleaned plan (splits, resamples, metadata
-    # aggregates) — cache it once, exactly the SURVEY.md §7.4(6) note.
-    cleaned = cleaned.cache()
-    # One count of the cleaned frame; split sizes derive from it below
-    # instead of one count job per split dataset (the splits partition
-    # the input, so the arithmetic is exact).
-    n_full = cleaned.count()
-
+    result: dict = {"symbol": symbol, "datasets": {}, "paths": {}}
+    # One count of the cleaned rows (the report's final_rows when it is
+    # asked for); split sizes derive from it below instead of one count
+    # job per split dataset (the splits partition the input, so the
+    # arithmetic is exact).
+    if config.include_report:
+        result["validation_report"] = staged_report(staged)
+        n_full = result["validation_report"]["final_rows"]
+    else:
+        n_full = cleaned.count()
     datasets: dict[str, DataFrame] = {"full": cleaned}
     counts: dict[str, int] = {"full": n_full}
     for tf in config.resample_to:
@@ -137,14 +143,6 @@ def run_pipeline_single(
     else:
         raise ValueError(f"unknown split_method {config.split_method!r}")
 
-    result: dict = {"symbol": symbol, "datasets": {}, "paths": {}}
-    if config.include_report:
-        result["validation_report"] = validation_report(
-            source,
-            mode=config.clean_mode,
-            price_tolerance=config.price_tolerance,
-            impute_method=config.impute_method,
-        )
     for name, df in datasets.items():
         result["datasets"][name] = (
             counts[name] if name in counts else df.count()
@@ -172,7 +170,7 @@ def run_pipeline_single(
         md.num_records = result["datasets"]["full"]
         store.save(md)
         result["metadata"] = md.key
-    cleaned.unpersist()
+    staged.unpersist()
     return result
 
 

@@ -1,55 +1,47 @@
 """Validation report (SURVEY.md §1.3) — the reference's most
-user-visible output, re-expressed as lazy aggregates.
+user-visible output, as one-row aggregates over the staged frame.
 
 ``EnhancedDataValidator.validate_and_clean``
 (``src/data_etl/processing/data_cleaner.py:82-167``) interleaves
 cleaning with counter collection and returns ``(cleaned_df, report)``.
-Here cleaning stays the pure lazy plan built by
-:func:`financial_data_pipeline_spark.operators.cleaning.clean_ohlcv`;
-the report is a SECOND plan — one-row aggregates over the same staged
-lineage — so the counters never force eager materialization between
-stages the way the reference's pandas passes do.
+Here :func:`financial_data_pipeline_spark.operators.cleaning.stage_ohlcv`
+builds ONE staged frame — one row per input row, each cleaning stage's
+flags and values as columns — and this module only aggregates it.
+``clean_ohlcv`` is the same frame filtered to its surviving rows, so
+the report cannot drift from the cleaning it describes, and a caller
+that wants both (``plans.pipeline``) persists the staged frame once
+and derives both from it (:func:`staged_report`).
 
-Counter → stage map (mirrors ``clean_ohlcv``'s frozen order):
+Counter → staged column (see ``stage_ohlcv`` for the columns):
 
-- ``total_records`` / ``invalid_timestamps`` — post ts-normalize
-  (``data_cleaner.py:89,663-688``)
-- ``duplicates_removed`` — keep-first dedup delta
-  (``data_cleaner.py:104-112``)
-- ``initial_nans`` — OHLCV nulls after numeric coercion
+- ``total_records`` / ``invalid_timestamps`` — every row / null
+  ``timestamp`` (``data_cleaner.py:89,663-688``)
+- ``duplicates_removed`` — ``__dup`` (``data_cleaner.py:104-112``)
+- ``initial_nans`` — null ``__c_<col>`` cells of ``__kept`` rows
   (``data_cleaner.py:120``)
-- ``negative_rows`` — rows dropped by the negative filter
+- ``negative_rows`` — ``__kept`` but not ``__kept2``
   (``data_cleaner.py:207-216``)
-- ``outliers_<col>`` / ``outliers_fixed`` — IQR-bound violations per
-  column before winsorization (``data_cleaner.py:218-236``)
-- ``invalid_ohlc`` — tolerance-predicate violations after the clip,
-  before repair (``data_cleaner.py:238-269``)
+- ``outliers_<col>`` / ``outliers_fixed`` — ``__o_<col>`` over the
+  ``__kept2`` rows (``data_cleaner.py:218-236``)
+- ``invalid_ohlc`` — ``__bad`` over the ``__kept2`` rows: after the
+  clip, before repair or drop (``data_cleaner.py:238-269``)
 - ``time_gaps`` (> 6 × median interval), ``most_common_interval_seconds``
   / ``irregular_intervals``, ``zero_price_rows``,
   ``extreme_price_changes``, ``zero_volume_rows``, ``final_rows`` /
-  ``nans_after`` / ``valid_records`` / ``is_valid`` — final frame
-  (``data_cleaner.py:271-285,294-398,161-166``)
+  ``nans_after`` / ``valid_records`` / ``is_valid`` — the ``__final``
+  rows (``data_cleaner.py:271-285,294-398,161-166``)
 
-Scale design — ONE pass builds a *flag frame*, few passes aggregate it:
-instead of materializing (or lazily re-deriving) each cleaning stage
-per counter, every stage's effect is computed as per-row FLAG/VALUE
-columns over a single frame whose windows all partition by ``symbol``
-— one hash shuffle total, reused by the dedup-tie detection, the
-masked ffill/bfill, and the final lag windows (Catalyst reuses the
-exchange across the downstream aggregates). The only extra passes are
-the inherently scalar-dependent ones: IQR bounds, per-symbol median
-interval, and the global interval-mode rollup — each a tiny aggregate
-over the same cached flag frame, broadcast back. The reference makes
-~10 eager pandas passes for the same counters
-(``data_cleaner.py:82-167``); at 100 TB this plan is one wide scan +
-one shuffle + four cheap re-aggregations of a cached columnar frame.
+Passes over the staged frame: one aggregate for every stage counter,
+one lag window (by ``symbol``) over the final rows with its per-symbol
+median interval broadcast back, and the interval-mode rollup. The
+reference makes ~10 eager pandas passes for the same counters.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from financial_data_pipeline_spark.operators import cleaning
@@ -58,284 +50,54 @@ from financial_data_pipeline_spark.schema import (
     PRICE_COLUMNS,
 )
 
-REPORT_COLUMNS = [
-    "total_records",
-    "invalid_timestamps",
-    "duplicates_removed",
-    "initial_nans",
-    "negative_rows",
-    *[f"outliers_{c}" for c in OHLCV_COLUMNS],
-    "outliers_fixed",
-    "invalid_ohlc",
-    "zero_price_rows",
-    "zero_volume_rows",
-    "extreme_price_changes",
-    "time_gaps",
-    "most_common_interval_seconds",
-    "irregular_intervals",
-    "final_rows",
-    "nans_after",
-    "valid_records",
-    "is_valid",
-    "time_features_added",
-]
-
-
-def _flag_frame(
-    df: DataFrame, epoch_unit: str, impute_method: str = "ffill"
+def _counters(
+    staged: DataFrame,
+    extreme_change_threshold: float = 0.2,
+    add_time_features: bool = True,
 ) -> DataFrame:
-    """ONE frame carrying every stage's effect as per-row columns.
-
-    All windows partition by ``symbol`` and order by ``timestamp`` —
-    one hash shuffle, one sort, shared by dedup-tie detection, the
-    masked ffill/bfill, and (downstream) the final lag windows.
-
-    Columns: ``__valid`` (parseable timestamp), ``__kept`` (valid and
-    first of its (symbol, ts) tie group — the keep-first dedup as a
-    lag-equality test), ``__c_<col>`` (coerced raw value), ``__i_<col>``
-    (imputed value: ffill-then-bfill over KEPT rows only, via
-    null-masked window aggregates), ``__nonneg`` (row survives the
-    negative filter), ``__kept2`` (kept ∧ nonneg).
-    """
-    df = cleaning.lowercase_columns(df)
-    df = cleaning.require_columns(df)
-    if "symbol" not in df.columns:
-        df = df.withColumn("symbol", F.lit("UNKNOWN"))
-    df = cleaning.normalize_timestamp(df, epoch_unit=epoch_unit)
-    cols = [c for c in OHLCV_COLUMNS if c in df.columns]
-
-    w = Window.partitionBy("symbol").orderBy(F.col("timestamp").asc_nulls_last())
-    valid = F.col("timestamp").isNotNull()
-    dup = valid & (F.col("timestamp") == F.lag("timestamp").over(w))
-    out = df.withColumns(
-        {
-            "__valid": valid,
-            "__dup": F.coalesce(dup, F.lit(False)),
-        }
-        | {f"__c_{c}": F.col(c).cast("double") for c in cols}
-    ).withColumn("__kept", F.col("__valid") & ~F.col("__dup"))
-    if impute_method == "ffill":
-        # Window exprs as SQL text (r10, guide §7.3 — construction
-        # round trips; identical parse pinned by the oracle + the
-        # pandas differential in tests/test_report.py).
-        # masked ffill: last non-null KEPT value at or before the row
-        wff = (
-            "OVER (PARTITION BY symbol ORDER BY timestamp ASC NULLS LAST "
-            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-        )
-        out = out.withColumns(
-            {
-                f"__ff_{c}": F.expr(
-                    f"last(CASE WHEN __kept THEN __c_{c} END, true) {wff}"
-                )
-                for c in cols
-            }
-        )
-        # masked bfill of the ffilled series: first non-null KEPT ffill
-        # value at or after the row — evaluated over the REVERSED sort
-        # with a preceding frame (unbounded-FOLLOWING aggregate frames
-        # are O(n²) in Spark; see cleaning.bfill)
-        wbf = (
-            "OVER (PARTITION BY symbol ORDER BY timestamp DESC NULLS FIRST "
-            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-        )
-        out = out.withColumns(
-            {
-                f"__i_{c}": F.expr(
-                    f"last(CASE WHEN __kept THEN __ff_{c} END, true) {wbf}"
-                )
-                for c in cols
-            }
-        )
-    elif impute_method == "interpolate":
-        # masked twin of cleaning.interpolate_linear: bracketing KEPT
-        # known values strictly before/after, time-weighted blend
-        t_us = F.unix_micros(F.col("timestamp")).cast("double")
-        wp = w.rowsBetween(Window.unboundedPreceding, -1)
-        # strictly-after lookups over the REVERSED sort (see above)
-        wn = Window.partitionBy("symbol").orderBy(
-            F.col("timestamp").desc_nulls_first()
-        ).rowsBetween(Window.unboundedPreceding, -1)
-        upd = {}
-        for c in cols:
-            v = F.col(f"__c_{c}")
-            masked_v = F.when(F.col("__kept"), v)
-            masked_t = F.when(F.col("__kept") & v.isNotNull(), t_us)
-            pv = F.last(masked_v, ignorenulls=True).over(wp)
-            pt = F.last(masked_t, ignorenulls=True).over(wp)
-            nv = F.last(masked_v, ignorenulls=True).over(wn)
-            nt = F.last(masked_t, ignorenulls=True).over(wn)
-            upd[f"__i_{c}"] = (
-                F.when(v.isNotNull(), v)
-                .when(pv.isNull(), nv)
-                .when(nv.isNull(), pv)
-                .otherwise(pv + (nv - pv) * (t_us - pt) / (nt - pt))
-            )
-        out = out.withColumns(upd)
-    else:
-        raise ValueError(
-            f"impute_method must be 'ffill' or 'interpolate', got {impute_method!r}"
-        )
-    nonneg = reduce(
-        lambda a, b: a & b,
-        [
-            F.col(f"__i_{c}").isNull() | (F.col(f"__i_{c}") >= 0)
-            for c in cols
-        ],
-    )
-    return out.withColumn("__nonneg", nonneg).withColumn(
-        "__kept2", F.col("__kept") & nonneg
-    )
-
-
-def _counters_from_flags(
-    flags: DataFrame,
-    mode: str,
-    iqr_factor: float,
-    price_tolerance: float,
-    extreme_change_threshold: float,
-    add_time_features: bool,
-) -> DataFrame:
-    cols = [c for c in OHLCV_COLUMNS if f"__i_{c}" in flags.columns]
-    kept, kept2 = F.col("__kept"), F.col("__kept2")
-
-    # P1 — every pre-outlier counter in one aggregate pass (exprs as
-    # SQL text: one py4j round trip per aggregate instead of ~5 per
-    # operator — r10 §7.3; values pinned by the driver oracle and the
-    # pandas differential in tests/test_report.py)
+    cols = OHLCV_COLUMNS
+    # stage counters in one aggregate (exprs as SQL text: one py4j
+    # round trip each; values pinned by the driver oracle and the
+    # pandas differential in tests/test_report.py). Outliers and OHLC
+    # violations count over ALL survivors of the negative filter, also
+    # the rows strict mode is about to drop (data_cleaner.py:241-249
+    # counts BEFORE acting).
     nan_cells = " + ".join(
-        f"sum(CAST((__kept AND (__c_{c} IS NULL)) AS LONG))" for c in cols
+        f"sum(CAST((__kept AND __c_{c} IS NULL) AS LONG))" for c in cols
     )
-    a_stage = flags.agg(
+    stage = staged.agg(
         F.expr("count(1) AS total_records"),
-        F.expr("sum(CAST((NOT __valid) AS LONG)) AS invalid_timestamps"),
+        F.expr("sum(CAST((timestamp IS NULL) AS LONG)) AS invalid_timestamps"),
         F.expr("sum(CAST(__dup AS LONG)) AS duplicates_removed"),
         F.expr(f"{nan_cells} AS initial_nans"),
-        F.expr(
-            "sum(CAST((__kept AND (NOT __nonneg)) AS LONG)) AS negative_rows"
-        ),
-    )
-
-    # P2 — IQR bounds over surviving rows (scalar-dependent: own pass)
-    b_aggs = []
-    for c in cols:
-        masked = f"CASE WHEN __kept2 THEN __i_{c} END"
-        b_aggs += [
-            F.expr(f"percentile({masked}, 0.25D) AS __q1_{c}"),
-            F.expr(f"percentile({masked}, 0.75D) AS __q3_{c}"),
-        ]
-    bounds = flags.groupBy("symbol").agg(*b_aggs)
-
-    # P3 — survivors joined with bounds: outlier flags, clipped values,
-    # repair, final-frame lag counters, all coexisting per row
-    surv = flags.filter(kept2).join(F.broadcast(bounds), on="symbol", how="left")
-    clip_cols, out_flags = {}, {}
-    f_lit = f"{float(iqr_factor)!r}D"
-    for c in cols:
-        v = f"__i_{c}"
-        iqr = f"(__q3_{c} - __q1_{c})"
-        lo = f"(__q1_{c} - {f_lit} * {iqr})"
-        hi = f"(__q3_{c} + {f_lit} * {iqr})"
-        out_flags[c] = F.expr(f"({v} < {lo}) OR ({v} > {hi})")
-        clip_cols[f"__cl_{c}"] = (
-            F.expr(
-                f"CASE WHEN {v} IS NOT NULL THEN "
-                f"greatest({lo}, least({hi}, {v})) END"
-            )
-            if mode == "repair"
-            else F.col(v)
-        )
-    surv = surv.withColumns(
-        {f"__o_{c}": out_flags[c] for c in cols} | clip_cols
-    )
-    h, l, o, c_ = (f"__cl_{x}" for x in ("high", "low", "open", "close"))
-    hi_t = f"({h} * {float(1.0 + price_tolerance)!r}D)"
-    lo_t = f"({l} * {float(1.0 - price_tolerance)!r}D)"
-    consistent = (
-        f"(({hi_t} >= {l}) AND ({hi_t} >= {o}) AND ({hi_t} >= {c_}) "
-        f"AND ({lo_t} <= {o}) AND ({lo_t} <= {c_}))"
-    )
-    bad = f"(NOT {consistent})"
-    if mode == "repair":
-        surv = surv.withColumns(
-            {
-                "__bad": F.expr(bad),
-                "__f_high": F.expr(
-                    f"CASE WHEN {bad} THEN greatest({o}, {c_}, {h}) "
-                    f"ELSE {h} END"
-                ),
-                "__f_low": F.expr(
-                    f"CASE WHEN {bad} THEN least({o}, {c_}, {l}) "
-                    f"ELSE {l} END"
-                ),
-                "__f_open": F.col(o),
-                "__f_close": F.col(c_),
-                "__f_volume": F.col("__cl_volume"),
-                "__final": F.lit(True),
-            }
-        )
-    else:
-        positive = (
-            "("
-            + " AND ".join(f"(__cl_{x} > 0)" for x in PRICE_COLUMNS)
-            + " AND (__cl_volume >= 0))"
-        )
-        no_null = (
-            "(" + " AND ".join(f"(__cl_{x} IS NOT NULL)" for x in cols) + ")"
-        )
-        surv = surv.withColumns(
-            {
-                "__bad": F.expr(bad),
-                "__f_high": F.col(h),
-                "__f_low": F.col(l),
-                "__f_open": F.col(o),
-                "__f_close": F.col(c_),
-                "__f_volume": F.col("__cl_volume"),
-                # strict: drop positive-price failures, OHLC violations,
-                # remaining nulls (clean_ohlcv strict order)
-                "__final": F.expr(
-                    f"coalesce({positive} AND {consistent} AND {no_null}, "
-                    "false)"
-                ),
-            }
-        )
-    # Outlier flags and OHLC violations count over ALL survivors of the
-    # negative filter (pre-drop): in strict mode the violating rows are
-    # about to be dropped from `fin`, and the report must still count
-    # them (data_cleaner.py:241-249 counts BEFORE acting).
-    a_pre = surv.agg(
+        F.expr("sum(CAST((__kept AND NOT __kept2) AS LONG)) AS negative_rows"),
         *[
-            F.expr(f"sum(CAST(__o_{c} AS LONG)) AS outliers_{c}")
+            F.expr(
+                f"sum(CASE WHEN __kept2 THEN CAST(__o_{c} AS LONG) END) "
+                f"AS outliers_{c}"
+            )
             for c in cols
         ],
-        F.expr("sum(CAST(__bad AS LONG)) AS invalid_ohlc"),
+        F.expr("sum(CASE WHEN __kept2 THEN CAST(__bad AS LONG) END) AS invalid_ohlc"),
     )
 
-    fin = surv.filter(F.col("__final"))
     wf = "OVER (PARTITION BY symbol ORDER BY timestamp)"
-    fin = fin.withColumns(
+    fin = staged.filter("__final").withColumns(
         {
             "__iv": F.expr(
                 f"(unix_micros(timestamp) - "
                 f"unix_micros(lag(timestamp) {wf})) / 1.0E6"
             ),
-            "__chg": F.expr(
-                f"abs(__f_close / lag(__f_close) {wf} - 1.0D)"
-            ),
+            "__chg": F.expr(f"abs(close / lag(close) {wf} - 1.0D)"),
         }
     )
     med = fin.groupBy("symbol").agg(F.median("__iv").alias("__med_iv"))
     fin = fin.join(F.broadcast(med), on="symbol", how="left")
-
-    zero_price = (
-        "(" + " OR ".join(f"(__f_{x} = 0)" for x in PRICE_COLUMNS) + ")"
-    )
-    nans_after = " + ".join(
-        f"sum(CAST((__f_{c} IS NULL) AS LONG))" for c in cols
-    )
-    a_final = fin.agg(
-        F.expr(f"sum(CAST({zero_price} AS LONG)) AS zero_price_rows"),
-        F.expr("sum(CAST((__f_volume = 0) AS LONG)) AS zero_volume_rows"),
+    zero_price = " OR ".join(f"{x} = 0" for x in PRICE_COLUMNS)
+    nans_after = " + ".join(f"sum(CAST(({c} IS NULL) AS LONG))" for c in cols)
+    final = fin.agg(
+        F.expr(f"sum(CAST(({zero_price}) AS LONG)) AS zero_price_rows"),
+        F.expr("sum(CAST((volume = 0) AS LONG)) AS zero_volume_rows"),
         F.expr(
             f"sum(CAST((__chg > {float(extreme_change_threshold)!r}D) "
             "AS LONG)) AS extreme_price_changes"
@@ -345,15 +107,15 @@ def _counters_from_flags(
         F.expr(f"{nans_after} AS nans_after"),
     )
 
-    # P4 — global interval mode over the (tiny) distinct-interval
-    # counts, as ONE aggregate (max_by with a (count, −iv) key == the
-    # (count desc, iv asc) rank) — no global window, and an aggregate
-    # always yields exactly one row, so an EMPTY final frame (fully
-    # dirty strict input) still produces a report row instead of the
-    # crossJoin erasing it.
+    # global interval mode over the (tiny) distinct-interval counts, as
+    # ONE aggregate (max_by with a (count, −iv) key == the (count desc,
+    # iv asc) rank) — no global window, and an aggregate always yields
+    # exactly one row, so an EMPTY final frame (fully dirty strict
+    # input) still produces a report row instead of the crossJoin
+    # erasing it.
     counts = fin.filter(F.col("__iv").isNotNull()).groupBy("__iv").count()
     mode_key = F.struct(F.col("count"), (-F.col("__iv")).alias("neg"))
-    a_mode = counts.agg(
+    interval_mode = counts.agg(
         F.max_by("__iv", mode_key).alias("most_common_interval_seconds"),
         (
             F.coalesce(F.sum("count"), F.lit(0))
@@ -361,7 +123,7 @@ def _counters_from_flags(
         ).alias("irregular_intervals"),
     )
 
-    row = a_stage.crossJoin(a_pre).crossJoin(a_final).crossJoin(a_mode)
+    row = stage.crossJoin(final).crossJoin(interval_mode)
     outliers_total = reduce(
         lambda a, b: a + b,
         [F.coalesce(F.col(f"outliers_{c}"), F.lit(0)) for c in cols],
@@ -402,30 +164,22 @@ def report_counters(
     """The full validation report as ONE one-row DataFrame.
 
     Lazy twin of ``validate_and_clean``'s report dict
-    (``data_cleaner.py:82-167``): one flag-frame pass (single symbol
-    shuffle) + three scalar-dependent re-aggregations (IQR bounds,
-    median interval, interval mode). See the module docstring for the
-    counter → stage map; semantics are pinned by the driver oracle and
-    the pandas differential in ``tests/test_report.py``."""
-    if mode not in ("repair", "strict"):
-        raise ValueError(f"mode must be 'repair' or 'strict', got {mode!r}")
-    # Lazy localCheckpoint (r9, guide §5): the counters plan crossJoins
-    # FOUR aggregates (stage counters, pre-drop outlier counts, final-
-    # frame counters, interval mode) plus the per-symbol IQR bounds,
-    # and each subtree re-derived the flag frame — the two window
-    # sorts over the corpus ran five times per report (measured: 18
-    # Spark jobs, 1.5 s at sf0.1). Pinning the frame computes it once
-    # and lets every subtree read the materialized rows; eager=False
-    # keeps this function action-free (the frame materializes on the
-    # caller's first action), and the checkpoint storage is released
-    # by the ContextCleaner when the frame is unreferenced.
-    return _counters_from_flags(
-        _flag_frame(df, epoch_unit, impute_method).localCheckpoint(
-            eager=False
-        ),
-        mode,
-        iqr_factor,
-        price_tolerance,
+    (``data_cleaner.py:82-167``): the counters of ``clean_ohlcv``'s
+    staged frame over ``df`` (same arguments). See the module docstring
+    for the counter → stage map; semantics are pinned by the driver
+    oracle and the pandas differential in ``tests/test_report.py``."""
+    staged = cleaning.stage_ohlcv(
+        df, mode, epoch_unit, iqr_factor, price_tolerance, impute_method
+    )
+    # Lazy localCheckpoint (guide §5): the counters read the staged
+    # frame in three subtrees (stage counters, final-frame counters,
+    # interval mode), and each would re-run its window sorts. Pinning
+    # computes the frame once; eager=False keeps this function
+    # action-free (the frame materializes on the caller's first
+    # action), and the ContextCleaner releases the checkpoint once the
+    # frame is unreferenced.
+    return _counters(
+        staged.localCheckpoint(eager=False),
         extreme_change_threshold,
         add_time_features,
     )
@@ -440,40 +194,40 @@ def validation_report(
     extreme_change_threshold: float = 0.2,
     add_time_features: bool = True,
     impute_method: str = "ffill",
-    cache: bool = True,
 ) -> dict:
     """Eager collector returning the reference's report-dict shape
     (``data_cleaner.py:82-167``, consumed at
     ``crypto_pipeline.py:480-489``): nested ``outliers_detected``
-    per-column map, top-level counters, ``is_valid`` flag.
-
-    ``cache=True`` persists the FLAG FRAME (post-window, one shuffle)
-    for the duration of the scalar-dependent re-aggregations — the
-    source is scanned and shuffled exactly once; pass False to keep
-    the plan fully lazy (e.g. when the caller manages persistence).
-    """
-    flags = _flag_frame(df, epoch_unit, impute_method)
-    if cache:
-        flags = flags.cache()
-    try:
-        row = _counters_from_flags(
-            flags,
+    per-column map, top-level counters, ``is_valid`` flag."""
+    return _as_dict(
+        report_counters(
+            df,
             mode,
+            epoch_unit,
             iqr_factor,
             price_tolerance,
             extreme_change_threshold,
             add_time_features,
+            impute_method,
         ).first()
-    finally:
-        if cache:
-            flags.unpersist()
+    )
+
+
+def staged_report(staged: DataFrame) -> dict:
+    """:func:`validation_report`, with its default report arguments, of
+    a ``cleaning.stage_ohlcv`` frame the caller already built (and
+    persisted); the cleaning arguments are those it was staged with."""
+    return _as_dict(_counters(staged).first())
+
+
+def _as_dict(row) -> dict:
     d = row.asDict()
     outliers = {c: int(d[f"outliers_{c}"] or 0) for c in OHLCV_COLUMNS}
-    report = {
+    return {
         "missing_cols": [],
         "total_records": int(d["total_records"]),
-        "invalid_timestamps": int(d["invalid_timestamps"]),
-        "duplicates_removed": int(d["duplicates_removed"]),
+        "invalid_timestamps": int(d["invalid_timestamps"] or 0),
+        "duplicates_removed": int(d["duplicates_removed"] or 0),
         "initial_nans": int(d["initial_nans"] or 0),
         "negative_rows": int(d["negative_rows"] or 0),
         "outliers_detected": {c: n for c, n in outliers.items() if n > 0},
@@ -496,4 +250,3 @@ def validation_report(
         "valid_records": int(d["valid_records"]),
         "is_valid": bool(d["is_valid"]),
     }
-    return report

@@ -74,10 +74,14 @@ _TABLE_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
 def clear_table_memo() -> None:
-    """Drop all memoized relations/schemas (for harnesses that rewrite
-    files in place or flip schema-affecting read configs mid-session)."""
+    """Drop all memoized relations/schemas, the lake's file schemas
+    included (for harnesses that rewrite files in place or flip
+    schema-affecting read configs mid-session)."""
+    from financial_data_pipeline_spark.sources import laketable
+
     _TABLE_MEMO.clear()
     _SCHEMA_MEMO.clear()
+    laketable._FILE_SCHEMA_MEMO.clear()
 
 
 def _load_table_fresh(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

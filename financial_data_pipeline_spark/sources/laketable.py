@@ -127,7 +127,8 @@ class Snapshot:
 # are validated against (mtime_ns, size) so any out-of-band rewrite
 # falls back to plain inference, as does any path set whose memoized
 # schemas disagree (additive schema evolution keeps today's
-# pick-a-footer inference behavior).
+# pick-a-footer inference behavior). Snapshot expiry evicts the files
+# it deletes, and ``adapters.clear_table_memo`` clears it all.
 _FILE_SCHEMA_MEMO: dict[str, tuple[int, int, "object"]] = {}
 
 
@@ -240,16 +241,33 @@ _FOOTER_EXACT_PREFIXES = ("int", "date", "timestamp", "bool", "uint", "time")
 
 def _footer_scalar(v):
     """Normalize a pyarrow footer statistic to the exact value the
-    Spark stats job collects: tz-aware timestamps (isAdjustedToUTC
-    parquet columns) become naive UTC wall clock — the session runs in
-    UTC, so Spark's collected datetimes are naive UTC and the manifest
-    ISO strings must match byte-for-byte or string-order range pruning
-    at equal boundaries would mis-prune."""
+    Spark stats job stores: tz-aware timestamps (isAdjustedToUTC
+    parquet columns) become naive UTC wall clock — the session
+    timezone, so manifest ISO strings must match byte-for-byte or
+    string-order range pruning at equal boundaries would mis-prune."""
     import datetime
 
     if isinstance(v, datetime.datetime) and v.tzinfo is not None:
         return v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
     return v
+
+
+def _collected_scalar(v, dtype):
+    """Manifest form of a bound collected from Spark. PySpark's
+    ``collect`` returns TIMESTAMP values as naive DRIVER-LOCAL wall
+    clock (``TimestampType.fromInternal`` uses the process timezone,
+    whatever the session timezone); the manifest stores naive UTC, as
+    the footer path does and as range bounds passed to ``read`` are
+    meant (the session runs in UTC). Local strings would also break
+    string order across a DST fall-back hour; ``astimezone`` honours
+    the fold. TIMESTAMP_NTZ values are zone-free and pass through."""
+    import datetime
+
+    from pyspark.sql.types import TimestampType
+
+    if v is not None and isinstance(dtype, TimestampType):
+        v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+    return _json_scalar(v)
 
 
 def _footer_stats(
@@ -395,11 +413,15 @@ def _collect_stats(
                 f"ELSE acc END)"
             )
             aggs.append(F.bit_or(word).alias(f"__bloom_{c}_{w}"))
+    types = {c: df.schema[c].dataType for c in stat_cols}
     rows = df.groupBy("__file").agg(*aggs).collect()
     out = []
     for r in rows:
         stats = {
-            c: [_json_scalar(r[f"__min_{c}"]), _json_scalar(r[f"__max_{c}"])]
+            c: [
+                _collected_scalar(r[f"__min_{c}"], types[c]),
+                _collected_scalar(r[f"__max_{c}"], types[c]),
+            ]
             for c in stat_cols
         }
         for c in stat_cols:
@@ -1095,10 +1117,10 @@ class LakeTable:
     ) -> tuple[list[FileStat], list[FileStat]]:
         """(touched, carried): files that can / cannot hold a row
         matching the key frame on ``k0``. Bounds are normalized through
-        ``_json_scalar`` because manifest stats store dates/timestamps
-        as ISO-8601 strings (which compare correctly as strings) —
-        merge/delete/refresh on a date key would otherwise compare str
-        against datetime.
+        ``_collected_scalar`` because manifest stats store dates and
+        (UTC) timestamps as ISO-8601 strings (which compare correctly
+        as strings) — merge/delete/refresh on a date key would
+        otherwise compare str against datetime.
 
         The bounds aggregate computes min/max AND count AND has_null in
         one job, because min/max alone lie twice: (a) they SKIP nulls,
@@ -1134,7 +1156,9 @@ class LakeTable:
         files = self._load_snapshot(version).files
         if raw["cnt"] == 0:
             return [], list(files)  # no keys → nothing can match
-        lo, hi = _json_scalar(raw["lo"]), _json_scalar(raw["hi"])
+        k_type = keys.schema[k0].dataType
+        lo = _collected_scalar(raw["lo"], k_type)
+        hi = _collected_scalar(raw["hi"], k_type)
         has_null = bool(raw["has_null"])
         touched, carried = [], []
         for fs in files:
@@ -1341,6 +1365,7 @@ class LakeTable:
             for fs in snaps[v].files if snaps.get(v) is not None else []:
                 if fs.path not in live and os.path.exists(fs.path):
                     os.remove(fs.path)
+                    _FILE_SCHEMA_MEMO.pop(fs.path, None)
                     deleted.append(fs.path)
                     self._fault("expire:mid_data_delete")
             self._fault("expire:pre_manifest_delete")

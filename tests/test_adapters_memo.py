@@ -90,3 +90,21 @@ def spark():
     s = get_spark(shuffle_partitions=4)
     s.sparkContext.setLogLevel("ERROR")
     return s
+
+
+def test_lake_file_schema_memo_is_bounded(spark, tmp_path):
+    """The lake's file-schema memo forgets the files snapshot expiry
+    deletes, and clear_table_memo() empties it."""
+    from financial_data_pipeline_spark.sources import laketable
+    from financial_data_pipeline_spark.sources.adapters import clear_table_memo
+
+    t = laketable.LakeTable(spark, str(tmp_path / "tbl"), stat_cols=["k"])
+    t.commit(spark.range(0, 10).withColumnRenamed("id", "k"))
+    first = {fs.path for fs in t._load_snapshot(t.head_version()).files}
+    t.commit(spark.range(10, 20).withColumnRenamed("id", "k"), mode="overwrite")
+    assert first and first <= set(laketable._FILE_SCHEMA_MEMO)
+    t.expire_snapshots(keep_last=1)
+    assert not first & set(laketable._FILE_SCHEMA_MEMO)
+    assert laketable._FILE_SCHEMA_MEMO
+    clear_table_memo()
+    assert not laketable._FILE_SCHEMA_MEMO

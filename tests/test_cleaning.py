@@ -47,6 +47,34 @@ def test_clean_ohlcv_strict_drops(spark, dirty_pdf):
     assert (out.volume >= 0).all()
 
 
+def test_clean_ohlcv_keeps_underscore_input_columns(spark, dirty_pdf):
+    """A ``__``-prefixed input column (pandas-written parquet carries
+    ``__index_level_0__``) passes through like any other column."""
+    pdf = dirty_pdf.assign(__index_level_0__=np.arange(len(dirty_pdf)))
+    df = spark.createDataFrame(pdf)
+    for mode in ["repair", "strict"]:
+        out = cleaning.clean_ohlcv(df, mode=mode)
+        assert out.columns[-5:] == [
+            "__index_level_0__", "hour", "day_of_week", "month", "year"
+        ], mode
+        assert out.filter(F.col("__index_level_0__").isNull()).count() == 0
+
+
+def test_iqr_clip_leaves_null_symbol_rows_unclipped(spark):
+    rows = [("A", float(v)) for v in [1, 2, 3, 4, 1000]] + [(None, 1000.0)]
+    df = spark.createDataFrame(rows, "symbol string, close double")
+    got = {
+        (r.symbol, r.close)
+        for r in cleaning.iqr_clip(df, cols=["close"]).collect()
+    }
+    # A: q1=2, q3=4 → upper fence 7; the null-symbol row has no quartiles
+    assert got == {("A", 1.0), ("A", 2.0), ("A", 3.0), ("A", 4.0), ("A", 7.0),
+                   (None, 1000.0)}
+    glob = cleaning.iqr_clip(df, cols=["close"], per_symbol=False)
+    # all six rows: q1=2.25, q3=751 → upper fence 1874.125 clips nothing
+    assert sorted(r.close for r in glob.collect()) == [1, 2, 3, 4, 1000, 1000]
+
+
 def test_iqr_clip_matches_pandas(spark, ohlcv_pdf):
     pdf = ohlcv_pdf[ohlcv_pdf.symbol == "BTCUSDT"].copy()
     # inject outliers
@@ -160,6 +188,11 @@ def test_core_operators_accept_empty_input(spark):
 
     cleaned = cl.clean_ohlcv(empty, mode="repair")
     assert cleaned.count() == 0
+
+    from financial_data_pipeline_spark.plans.report import validation_report
+
+    rep = validation_report(empty)
+    assert rep["total_records"] == 0 and rep["is_valid"] is False
 
     res = resample.resample_ohlcv(empty, "4h", fill_gaps=False)
     assert res.count() == 0

@@ -5,6 +5,7 @@ manifests to the Spark aggregation it replaces (range pruning compares
 the stored ISO strings, so even a formatting drift mis-prunes)."""
 
 import datetime
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -32,9 +33,24 @@ def _write(spark, tmp_path, df, name):
     ]
 
 
-def test_footer_stats_match_spark_job(spark, tmp_path):
+@pytest.fixture
+def driver_tz(monkeypatch):
+    """Switch the driver process timezone (TZ + tzset); restored after."""
+
+    def set_tz(tz):
+        monkeypatch.setenv("TZ", tz)
+        time.tzset()
+
+    yield set_tz
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_footer_stats_match_spark_job(spark, tmp_path, driver_tz):
     """int + date + timestamp stat cols, nulls included, several files:
-    the footer path and the Spark job must emit IDENTICAL FileStats."""
+    the footer path and the Spark job must emit IDENTICAL FileStats,
+    on a UTC and on a non-UTC driver (collect returns driver-local
+    naive timestamps; both paths must store naive UTC)."""
     df = (
         spark.range(0, 1000)
         .select(
@@ -55,17 +71,65 @@ def test_footer_stats_match_spark_job(spark, tmp_path):
     )
     files = _write(spark, tmp_path, df, "t1")
     cols = ["k", "nullable_k", "day", "ts"]
-    fast = _footer_stats(files, cols)
-    assert fast is not None, "footer path must engage for exact types"
-    slow = _collect_stats(spark, files, cols, bloom_cols=["k"])
-    # bloom_cols forces the Spark job; drop the bloom entry to compare
-    for fs in slow:
-        fs.stats.pop("__bloom_k", None)
-    assert _canon(fast) == _canon(slow)
-    # the timestamp strings must be NAIVE-UTC ISO (string-order pruning
-    # at equal boundaries depends on the exact format)
-    ts_min = dict(fast[0].stats)["ts"][0]
-    assert "+" not in ts_min and ts_min.startswith("2024-")
+    for tz in ["UTC", "America/New_York"]:
+        driver_tz(tz)
+        fast = _footer_stats(files, cols)
+        assert fast is not None, "footer path must engage for exact types"
+        slow = _collect_stats(spark, files, cols, bloom_cols=["k"])
+        # bloom_cols forces the Spark job; drop the bloom entry to compare
+        for fs in slow:
+            fs.stats.pop("__bloom_k", None)
+        assert _canon(fast) == _canon(slow), tz
+        # the timestamp strings must be NAIVE-UTC ISO whatever the
+        # driver's zone (string-order pruning at equal boundaries
+        # depends on the exact format)
+        ts_min = min(dict(fs.stats)["ts"][0] for fs in fast)
+        assert ts_min == "2024-01-01T00:00:00", tz
+
+
+@pytest.mark.parametrize("bloom", [False, True], ids=["footer", "spark_job"])
+def test_timestamp_merge_and_pruned_read_on_non_utc_driver(
+    spark, tmp_path, driver_tz, bloom
+):
+    """Round trip on a New York driver: a pruned range read given UTC
+    bounds keeps the file holding 20:00Z-22:00Z rows, and a merge on a
+    key inside a file spanning the DST fall-back hour (05:50Z-06:10Z
+    reads 01:50-01:10 local) rewrites that file instead of leaving a
+    duplicate key."""
+    driver_tz("America/New_York")
+    t = LakeTable(
+        spark,
+        str(tmp_path / "tbl"),
+        stat_cols=["ts"],
+        bloom_cols=["ts"] if bloom else None,
+    )
+
+    def rows(*stamps):
+        # parsed by Spark in the (UTC) session zone, not by the driver
+        return spark.createDataFrame(list(stamps), "s string, v long").select(
+            F.col("s").cast("timestamp").alias("ts"), "v"
+        )
+
+    # one commit per file
+    for part in [
+        [("2024-01-01 02:00:00", 1), ("2024-01-01 04:00:00", 2)],
+        [("2024-01-01 20:00:00", 3), ("2024-01-01 22:00:00", 4)],
+        [
+            ("2024-11-03 05:50:00", 5),
+            ("2024-11-03 05:55:00", 6),
+            ("2024-11-03 06:10:00", 7),
+        ],
+    ]:
+        t.commit(rows(*part).coalesce(1))
+    assert len(t.pruned_files()) == 3
+    lo, hi = "2024-01-01T20:00:00", "2024-01-01T23:00:00"
+    assert len(t.pruned_files(pred_col="ts", lo=lo, hi=hi)) == 1
+    window = t.read(pred_col="ts", lo=lo, hi=hi).filter(
+        F.col("ts").between(F.lit(lo).cast("timestamp"), F.lit(hi).cast("timestamp"))
+    )
+    assert sorted(r.v for r in window.collect()) == [3, 4]
+    t.merge(rows(("2024-11-03 05:55:00", 60)), ["ts"])
+    assert sorted(r.v for r in t.read().collect()) == [1, 2, 3, 4, 5, 7, 60]
 
 
 def test_footer_stats_fall_back_on_strings_and_doubles(spark, tmp_path):

@@ -130,35 +130,77 @@ def test_validation_report_matches_pandas(spark, report_dirty_pdf):
     assert got["duplicated_timestamps"] == 0
 
 
-def test_report_strict_mode_counts_drops(spark, report_dirty_pdf):
+def _overflow_strings_pdf() -> pd.DataFrame:
+    """String-typed OHLCV with one "-1e400" volume and one "1e400"
+    close: both overflow double, so numeric coercion must turn them
+    into nulls (pandas ``to_numeric`` parity), not ±Infinity — no
+    negative row, two initial NaN cells."""
+    n = 20
+    pdf = pd.DataFrame(
+        {
+            "timestamp": pd.date_range("2025-01-01", periods=n, freq="1min"),
+            "symbol": "S",
+            "open": [str(10.0 + i % 3) for i in range(n)],
+            "high": [str(12.0 + i % 3) for i in range(n)],
+            "low": [str(9.0 + i % 3) for i in range(n)],
+            "close": [str(11.0 + i % 3) for i in range(n)],
+            "volume": [str(100.0 + i) for i in range(n)],
+        }
+    )
+    pdf.loc[3, "volume"] = "-1e400"
+    pdf.loc[7, "close"] = "1e400"
+    return pdf
+
+
+@pytest.fixture(params=["dirty", "overflow_strings"])
+def consistency_case(request, report_dirty_pdf):
+    if request.param == "dirty":
+        return request.param, report_dirty_pdf
+    return request.param, _overflow_strings_pdf()
+
+
+def _assert_overflow_counters(rep):
+    assert rep["initial_nans"] == 2
+    assert rep["negative_rows"] == 0
+
+
+def test_report_strict_mode_counts_drops(spark, consistency_case):
     """Strict mode: no clip/repair — positive-price, OHLC-consistency
     and null filters DROP rows instead. valid_records must equal the
     strict clean_ohlcv row count, and invalid_ohlc counts the
     pre-drop violations."""
     from financial_data_pipeline_spark.operators import cleaning
 
-    df = spark.createDataFrame(report_dirty_pdf)
+    case, pdf = consistency_case
+    df = spark.createDataFrame(pdf)
     rep = rpt.validation_report(df, mode="strict", price_tolerance=0.0)
     cleaned_n = cleaning.clean_ohlcv(
         df, mode="strict", price_tolerance=0.0
     ).count()
     assert rep["valid_records"] == cleaned_n
+    if case == "overflow_strings":
+        _assert_overflow_counters(rep)
+        return
     assert rep["final_rows"] < rep["total_records"]  # strict drops rows
     assert rep["invalid_ohlc"] >= 3  # the planted high<low rows, unclipped
     assert rep["duplicates_removed"] == 3
     assert rep["is_valid"]
 
 
-def test_report_interpolate_mode_consistent_with_cleaning(spark, report_dirty_pdf):
+def test_report_interpolate_mode_consistent_with_cleaning(spark, consistency_case):
     """impute_method='interpolate' flows through both clean_ohlcv and
-    the report's flag frame: valid_records equals the cleaned row
-    count and the nan counters still close."""
+    the report: valid_records equals the cleaned row count and the nan
+    counters still close."""
     from financial_data_pipeline_spark.operators import cleaning
 
-    df = spark.createDataFrame(report_dirty_pdf)
+    case, pdf = consistency_case
+    df = spark.createDataFrame(pdf)
     rep = rpt.validation_report(df, impute_method="interpolate")
     cleaned_n = cleaning.clean_ohlcv(df, impute_method="interpolate").count()
     assert rep["valid_records"] == cleaned_n
+    if case == "overflow_strings":
+        _assert_overflow_counters(rep)
+        return
     assert rep["initial_nans"] == 2 and rep["nans_after"] == 0
     assert rep["duplicates_removed"] == 3
 

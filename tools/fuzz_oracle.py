@@ -689,10 +689,14 @@ def check_zscore_outlier_clean(spark, seed):
 
 def check_clean_ohlcv_end_to_end(spark, seed):
     """The frozen 13-step pipeline end-to-end, both modes, against a
-    faithful pandas replay. Duplicate keys are payload-identical here
+    faithful pandas replay, plus the validation report over the same
+    input: it aggregates the same staged frame, so its valid_records
+    must equal the cleaned row count and its dedup / negative counters
+    the replay's. Duplicate keys are payload-identical here
     (clean_ohlcv's dedup orders by timestamp only, so conflicting
     payloads would make the keep-first winner engine-arbitrary)."""
     from financial_data_pipeline_spark.operators.cleaning import clean_ohlcv
+    from financial_data_pipeline_spark.plans.report import validation_report
 
     pdf = make_corpus(seed)
     # collapse conflicting duplicate payloads onto the first occurrence
@@ -716,7 +720,20 @@ def check_clean_ohlcv_end_to_end(spark, seed):
     keep = pd.Series(True, index=base.index)
     for c in OHLCV:
         keep &= base[c].isna() | (base[c] >= 0)
+    want_counters = {
+        "duplicates_removed": len(pdf) - len(base),
+        "negative_rows": int((~keep).sum()),
+    }
     base = base[keep].reset_index(drop=True)
+
+    def report_errs(mode, n_cleaned):
+        rep = validation_report(sdf, mode=mode)
+        want = want_counters | {"valid_records": n_cleaned}
+        return [
+            f"report_{mode}: {k} got {rep[k]} want {v}"
+            for k, v in want.items()
+            if rep[k] != v
+        ]
 
     def timefeat(p):
         p = p.copy()
@@ -745,6 +762,7 @@ def check_clean_ohlcv_end_to_end(spark, seed):
         ["symbol", "timestamp"],
         label="clean_strict",
     )
+    errs += report_errs("strict", len(got_s))
     # repair mode: IQR winsorize then OHLC repair, nulls retained
     got_r = clean_ohlcv(sdf, mode="repair").toPandas()
     want_r = base.copy()
@@ -768,6 +786,7 @@ def check_clean_ohlcv_end_to_end(spark, seed):
         ["symbol", "timestamp"],
         label="clean_repair",
     )
+    errs += report_errs("repair", len(got_r))
     return errs
 
 
