@@ -5,10 +5,11 @@ Re-expresses ``DataSplitter`` (``src/data_etl/processing/data_splitter.py``).
 Scale note (SURVEY.md §7.4 item 4): chronological splits need a global
 row order. At fixture scale a global ``row_number`` window (single
 reduce partition) is fine; ``chronological_split`` therefore computes
-only the per-row rank lazily and the caller gets two filtered plans off
-one ranked base. The 100 TB path is a timestamp-quantile cutoff
-(``approx_percentile`` on the timestamp) — provided as
-``chronological_split_by_quantile`` — which needs no global sort at all.
+the per-row rank and the row count in that one window, lazily, and the
+caller gets two filtered plans off one ranked base. The 100 TB path is
+a timestamp-quantile cutoff (``approx_percentile`` on the timestamp) —
+provided as ``chronological_split_by_quantile`` — which needs no global
+sort at all.
 """
 
 from __future__ import annotations
@@ -17,29 +18,37 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _ranked(df: DataFrame, ts: str, total: int | None = None) -> DataFrame:
+def _ranked(df: DataFrame, ts: str) -> DataFrame:
+    """``df`` + its 1-based global rank ``__rn`` in (ts, other columns)
+    order + the row count ``__n``, both from one single-partition
+    window, so a cut needs no driver-side count."""
     w = Window.orderBy(F.col(ts).asc(), *[F.col(c) for c in df.columns if c != ts])
-    total = df.count() if total is None else total
-    return df.withColumn("__rn", F.row_number().over(w)), total
+    everything = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    return df.withColumns(
+        {"__rn": F.row_number().over(w), "__n": F.count(F.lit(1)).over(everything)}
+    )
+
+
+def _cut(frac: float):
+    """``int(n * frac)`` on the window's count: a double product cast to
+    BIGINT truncates exactly as Python's ``int`` does."""
+    return (F.col("__n") * F.lit(float(frac))).cast("bigint")
 
 
 def chronological_split(
     df: DataFrame,
     test_size: float = 0.2,
     ts: str = "timestamp",
-    total: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """SP1 (``data_splitter.py:32-64``): sort by ts; first
-    ``floor(n*(1-test_size))`` rows train, rest test.
-
-    ``total`` lets a caller that already counted the input (e.g. the
-    pipeline, which derives split sizes from one count) skip the extra
-    count job."""
-    ranked, n = _ranked(df, ts, total)
-    n_train = int(n * (1 - test_size))
-    train = ranked.filter(F.col("__rn") <= n_train).drop("__rn")
-    test = ranked.filter(F.col("__rn") > n_train).drop("__rn")
-    return train, test
+    ``floor(n*(1-test_size))`` rows train, rest test. Lazy: the count
+    comes from the same window as the rank, so building starts no job."""
+    ranked = _ranked(df, ts)
+    in_train = F.col("__rn") <= _cut(1 - test_size)
+    return (
+        ranked.filter(in_train).drop("__rn", "__n"),
+        ranked.filter(~in_train).drop("__rn", "__n"),
+    )
 
 
 def split_time_series(
@@ -49,14 +58,12 @@ def split_time_series(
     ts: str = "timestamp",
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """SP3 (``data_splitter.py:158-189``): chronological 3-way by row fraction."""
-    ranked, n = _ranked(df, ts)
-    n_train = int(n * train_ratio)
-    n_val = int(n * (train_ratio + val_ratio))
+    ranked = _ranked(df, ts)
     rn = F.col("__rn")
-    return (
-        ranked.filter(rn <= n_train).drop("__rn"),
-        ranked.filter((rn > n_train) & (rn <= n_val)).drop("__rn"),
-        ranked.filter(rn > n_val).drop("__rn"),
+    n_train, n_val = _cut(train_ratio), _cut(train_ratio + val_ratio)
+    return tuple(
+        ranked.filter(cond).drop("__rn", "__n")
+        for cond in (rn <= n_train, (rn > n_train) & (rn <= n_val), rn > n_val)
     )
 
 

@@ -1,12 +1,14 @@
 """Config-driven pipeline orchestration (SURVEY.md §3 E1).
 
 Reproduces ``CryptoPipeline.run_pipeline_single``
-(``crypto_pipeline.py:160-265,352-370``) as ONE lazy plan per dataset:
-source → clean → [normalize] → [resample] → split → sinks. The
-reference materializes a pandas frame between every stage; here nothing
-executes until the sinks (or the caller) force an action, so Catalyst
-optimizes across stage boundaries (e.g. a sink's column pruning reaches
-the source scan).
+(``crypto_pipeline.py:160-265,352-370``), where the reference
+materializes a pandas frame between every stage. Here each symbol is
+one wave: every dataset is first built as a lazy plan (source → clean →
+[normalize] → [resample] → split), so Catalyst optimizes across stage
+boundaries, and then every action of the symbol — the validation
+report, each sink write, the metadata aggregate — is submitted at once
+and runs concurrently. The row counts of the result ride on the writes
+as observed metrics instead of separate count jobs.
 
 Config mirrors ``PipelineConfig`` defaults + file + overrides
 (``pipelines/config_manager.py:17-89``): the typed dataclass below is
@@ -18,19 +20,30 @@ provides the defaults → env → JSON deep-merge front door
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field, replace
+from functools import partial
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
-from financial_data_pipeline_spark.metadata import (
-    MetadataStore,
-    compute_metadata,
-)
+from financial_data_pipeline_spark import metadata
+from financial_data_pipeline_spark.observability import PipelineMetrics
 from financial_data_pipeline_spark.operators import cleaning, normalize as norm
 from financial_data_pipeline_spark.operators import resample as rs
 from financial_data_pipeline_spark.operators import splitter
 from financial_data_pipeline_spark.plans.report import staged_report
 from financial_data_pipeline_spark.sources import sinks
+
+#: split method -> its dataset names, in the order the splitter returns them
+_SPLITS = {
+    "chronological": ("train", "test"),
+    "random": ("train", "test"),
+    "by_time": ("train", "val", "test"),
+}
+#: output format -> its writer in ``sources.sinks``, looked up per call
+_WRITERS = {"parquet": "write_parquet", "csv": "write_csv", "json": "write_json"}
 
 
 @dataclass
@@ -86,92 +99,149 @@ def run_pipeline_single(
 
     Returns the reference's result dict shape
     (``crypto_pipeline.py:480-489``): dataset names → row counts, plus
-    written paths. Everything up to the sinks is one lazy plan.
+    written paths. Every dataset is built as a lazy plan first; then the
+    report, the sink writes and the metadata aggregate run as one
+    concurrent wave. A written dataset's count is observed on its first
+    write; without sinks, each count the split arithmetic cannot give
+    is one count job. The staged and the cleaned frame are persisted
+    for the wave and released when it ends, also when it fails.
     """
-    # ONE staged frame (every cleaning stage's flags and values, one
-    # row per input row), persisted once: the full dataset, the splits,
-    # the resamples, the metadata and the report all derive from it.
-    staged = cleaning.stage_ohlcv(
-        source,
-        mode=config.clean_mode,
-        price_tolerance=config.price_tolerance,
-        impute_method=config.impute_method,
-    ).cache()
-    cleaned = cleaning.cleaned_from_staged(staged)
-    if config.normalize_method:
-        cleaned = norm.normalize(
-            cleaned, config.normalize_cols, method=config.normalize_method
-        )
-    result: dict = {"symbol": symbol, "datasets": {}, "paths": {}}
-    # One count of the cleaned rows (the report's final_rows when it is
-    # asked for); split sizes derive from it below instead of one count
-    # job per split dataset (the splits partition the input, so the
-    # arithmetic is exact).
+    if config.split_method not in _SPLITS:
+        raise ValueError(f"unknown split_method {config.split_method!r}")
+    for fmt in config.output_formats:
+        if fmt not in _WRITERS:
+            raise ValueError(f"unknown output format {fmt!r}")
+    persisted: list[DataFrame] = []
+    try:
+        # ONE staged frame (every cleaning stage's flags and values, one
+        # row per input row) feeds the report and the cleaned frame; the
+        # cleaned (and normalized) frame feeds every dataset and the
+        # metadata, so the normalize aggregate runs once per symbol.
+        staged = cleaning.stage_ohlcv(
+            source,
+            mode=config.clean_mode,
+            price_tolerance=config.price_tolerance,
+            impute_method=config.impute_method,
+        ).persist()
+        persisted.append(staged)
+        cleaned = cleaning.cleaned_from_staged(staged)
+        if config.normalize_method:
+            cleaned = norm.normalize(
+                cleaned, config.normalize_cols, method=config.normalize_method
+            )
+        cleaned = cleaned.persist()
+        persisted.append(cleaned)
+        datasets = _datasets(cleaned, config)
+
+        result: dict = {"symbol": symbol, "datasets": {}, "paths": {}}
+        actions: dict[str, Callable] = {}
+        if config.include_report:
+            actions["validation_report"] = partial(staged_report, staged)
+        split_names = _SPLITS[config.split_method]
+        if config.output_dir and config.output_formats:
+            rows = PipelineMetrics()
+            for name, df in datasets.items():
+                paths = [
+                    os.path.join(config.output_dir, symbol, f"{name}.{fmt}")
+                    for fmt in config.output_formats
+                ]
+                result["paths"][name] = paths
+                frames = [rows.observe(df, name)] + [df] * (len(paths) - 1)
+                actions[name] = partial(
+                    _write, rows, name, frames, config.output_formats, paths
+                )
+        else:
+            # No write to observe: count only what arithmetic cannot give.
+            # Full comes from the report, a chronological train from the
+            # cut, and the last split is the rest of full.
+            derived = {split_names[-1]}
+            if config.include_report:
+                derived.add("full")
+            if config.split_method == "chronological":
+                derived.add("train")
+            for name, df in datasets.items():
+                if name not in derived:
+                    actions[name] = df.count
+        if config.save_metadata and config.output_dir:
+            store = metadata.MetadataStore(
+                os.path.join(config.output_dir, "_metadata")
+            )
+            actions["metadata"] = partial(
+                _save_metadata, store, cleaned, symbol, config.interval
+            )
+
+        done = _wave(spark, actions)
+    finally:
+        for df in persisted:
+            df.unpersist()
+
     if config.include_report:
-        result["validation_report"] = staged_report(staged)
-        n_full = result["validation_report"]["final_rows"]
-    else:
-        n_full = cleaned.count()
-    datasets: dict[str, DataFrame] = {"full": cleaned}
-    counts: dict[str, int] = {"full": n_full}
+        result["validation_report"] = done["validation_report"]
+    counts = {name: done[name] for name in datasets if name in done}
+    if "full" not in counts:
+        counts["full"] = done["validation_report"]["final_rows"]
+    if config.split_method == "chronological":
+        counts.setdefault("train", int(counts["full"] * (1 - config.test_size)))
+    counts.setdefault(
+        split_names[-1],
+        counts["full"] - sum(counts[n] for n in split_names[:-1]),
+    )
+    result["datasets"] = {name: counts[name] for name in datasets}
+    if "metadata" in done:
+        result["metadata"] = done["metadata"]
+    return result
+
+
+def _datasets(cleaned: DataFrame, config: PipelineConfig) -> dict[str, DataFrame]:
+    """full, resampled_<tf> per target, then the splits — lazy plans."""
+    datasets = {"full": cleaned}
     for tf in config.resample_to:
         datasets[f"resampled_{tf}"] = rs.resample_ohlcv(cleaned, tf)
-
     if config.split_method == "chronological":
-        train, test = splitter.chronological_split(
-            cleaned, config.test_size, total=n_full
-        )
-        n_train = int(n_full * (1 - config.test_size))
-        datasets |= {"train": train, "test": test}
-        counts |= {"train": n_train, "test": n_full - n_train}
+        splits = splitter.chronological_split(cleaned, config.test_size)
     elif config.split_method == "random":
-        train, test = splitter.random_split(cleaned, config.test_size)
-        datasets |= {"train": train, "test": test}
-        n_test = test.count()  # randomSplit partitions exactly; train = rest
-        counts |= {"train": n_full - n_test, "test": n_test}
-    elif config.split_method == "by_time":
-        train, val, test = splitter.split_by_time(
+        splits = splitter.random_split(cleaned, config.test_size)
+    else:
+        splits = splitter.split_by_time(
             cleaned, config.split_train_end, config.split_val_end
         )
-        datasets |= {"train": train, "val": val, "test": test}
-        n_train, n_val = train.count(), val.count()
-        counts |= {
-            "train": n_train,
-            "val": n_val,
-            "test": n_full - n_train - n_val,
+    return datasets | dict(zip(_SPLITS[config.split_method], splits))
+
+
+def _wave(spark: SparkSession, actions: dict[str, Callable]) -> dict:
+    """Run every action at once, one thread each (carrying the caller's
+    local properties and tags); wait for all of them, then return their
+    results or raise the first failure."""
+    if not actions:
+        return {}
+    with ThreadPoolExecutor(len(actions)) as pool:
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(fn))
+            for name, fn in actions.items()
         }
-    else:
-        raise ValueError(f"unknown split_method {config.split_method!r}")
+    return {name: f.result() for name, f in futures.items()}
 
-    for name, df in datasets.items():
-        result["datasets"][name] = (
-            counts[name] if name in counts else df.count()
-        )
-        if config.output_dir:
-            for fmt in config.output_formats:
-                path = os.path.join(
-                    config.output_dir, symbol, f"{name}.{fmt}"
-                )
-                if fmt == "parquet":
-                    sinks.write_parquet(df, path)
-                elif fmt == "csv":
-                    sinks.write_csv(df, path)
-                elif fmt == "json":
-                    sinks.write_json(df, path)
-                else:
-                    raise ValueError(f"unknown output format {fmt!r}")
-                result["paths"].setdefault(name, []).append(path)
 
-    if config.save_metadata and config.output_dir:
-        store = MetadataStore(os.path.join(config.output_dir, "_metadata"))
-        md = compute_metadata(
-            cleaned, symbol, config.interval, data_source="pipeline"
-        )
-        md.num_records = result["datasets"]["full"]
-        store.save(md)
-        result["metadata"] = md.key
-    staged.unpersist()
-    return result
+def _write(
+    rows: PipelineMetrics,
+    name: str,
+    frames: list[DataFrame],
+    formats: list[str],
+    paths: list[str],
+) -> int:
+    """One write per format; the first frame carries the row-count
+    observation ``name``, whose value is returned."""
+    for df, fmt, path in zip(frames, formats, paths):
+        getattr(sinks, _WRITERS[fmt])(df, path)
+    return rows.get(name)["rows"]
+
+
+def _save_metadata(
+    store: metadata.MetadataStore, cleaned: DataFrame, symbol: str, interval: str
+) -> str:
+    md = metadata.compute_metadata(cleaned, symbol, interval, data_source="pipeline")
+    store.save(md)
+    return md.key
 
 
 def run_pipeline(

@@ -41,6 +41,13 @@ _DEFAULTS = {
     # vanilla Spark rejects; read as long and convert at the adapter
     # (same ns→µs truncation DuckDB applies when it reads the files).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Generated-class cache (static; Spark's default holds 100). One
+    # pipeline symbol (clean, z-score, three resamples, split, report,
+    # six sinks, metadata) needs ~125 classes, so at 100 entries every
+    # symbol evicted and recompiled ~120 of its own classes, and the
+    # compiler and JIT took cores its Spark jobs needed. 1000 holds
+    # several such working sets; a repeated plan shape compiles nothing.
+    "spark.sql.codegen.cache.maxEntries": "1000",
     # Driver-side niceties for a single-JVM local run; harmless on a cluster.
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),

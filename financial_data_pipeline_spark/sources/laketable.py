@@ -955,13 +955,15 @@ class LakeTable:
         # must derive from the same head, or a commit landing between
         # the two reads is silently built over (lost update)
         base = self.head_version()
-        new = self._write_files(df)
-        self._fault("commit:post_write_files")
+        # carried files are read before the write job, while a
+        # concurrent expire_snapshots cannot yet have deleted the base
         carried = (
             self._load_snapshot(base).files
             if mode == "append" and base > 0
             else []
         )
+        new = self._write_files(df)
+        self._fault("commit:post_write_files")
         return self._advance(mode, carried + new, app_meta, base=base)
 
     def stage(
@@ -993,13 +995,13 @@ class LakeTable:
             self._check_schema_compat(df)
         self._enforce_constraints(df)
         base = self.head_version()
-        new = self._write_files(df)
-        self._fault("stage:post_write_files")
-        carried = (
+        carried = (  # read before the write job, as in commit
             self._load_snapshot(base).files
             if mode == "append" and base > 0
             else []
         )
+        new = self._write_files(df)
+        self._fault("stage:post_write_files")
         return self._advance(
             mode, carried + new, app_meta, move_head=False, base=base
         )
@@ -1143,6 +1145,9 @@ class LakeTable:
         emptiness probe) pass it to skip the extra job."""
         from pyspark.sql import functions as F
 
+        # read the snapshot before the bounds job: a concurrent
+        # expire_snapshots may delete it while that job runs
+        files = self._load_snapshot(version).files
         raw = (
             bounds
             if bounds is not None
@@ -1153,7 +1158,6 @@ class LakeTable:
                 F.max(F.col(k0).isNull()).alias("has_null"),
             ).first()
         )
-        files = self._load_snapshot(version).files
         if raw["cnt"] == 0:
             return [], list(files)  # no keys → nothing can match
         k_type = keys.schema[k0].dataType

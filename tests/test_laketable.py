@@ -949,3 +949,34 @@ def test_advance_aborts_when_manifest_reclaimed_mid_dump(spark, table):
     assert table.read().count() == 200
     table.commit(_batch(spark, 2, 3, "b"))
     assert table.read().count() == 300
+
+
+def test_commit_survives_vacuum_of_its_base(spark, tmp_path, monkeypatch):
+    """A vacuum that expires a writer's base snapshot while the writer's
+    data job runs leaves an ordinary stale-base CommitConflict, not a
+    missing-manifest error, and the retry commits every row."""
+    from financial_data_pipeline_spark.sources.laketable import (
+        CommitConflict,
+        LakeTable,
+    )
+
+    root = str(tmp_path / "lake")
+    w1 = LakeTable(spark, root, stat_cols=["id"])
+    w2 = LakeTable(spark, root, stat_cols=["id"])
+    rows = lambda lo: spark.range(lo, lo + 3).selectExpr("id", "id AS v")  # noqa: E731
+    w1.commit(rows(0))  # v1: w2's base below
+    write = w2._write_files
+
+    def racing_write(df):
+        out = write(df)
+        w1.commit(rows(3))
+        w1.commit(rows(6))
+        w1.expire_snapshots(keep_last=1)  # deletes the v1 and v2 manifests
+        return out
+
+    monkeypatch.setattr(w2, "_write_files", racing_write)
+    with pytest.raises(CommitConflict, match="stale"):
+        w2.commit(rows(9))
+    monkeypatch.undo()
+    assert w2.commit(rows(9)) == 4
+    assert w2.read().count() == 12

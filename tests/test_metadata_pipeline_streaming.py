@@ -174,6 +174,118 @@ def test_run_pipeline_fanout_isolates_failures(spark):
     assert res["ETHUSDT"]["datasets"]["full"] > 0
 
 
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_failed_symbol_releases_its_persisted_frames(spark, tmp_path):
+    """A symbol that fails mid-run (the report has materialized the
+    staged frame, then the sinks fail: the output dir is a regular
+    file) and one with a bad config (rejected before any Spark work)
+    leave the session cache empty and no persistent RDD behind."""
+    good = synthetic.synthetic_ohlcv(
+        spark, ["ETHUSDT"], "2025-01-01", "2025-01-02", 60
+    )
+    blocker = tmp_path / "not_a_dir"
+    blocker.write_text("")
+    spark.catalog.clearCache()
+    before = _persistent_rdds(spark)
+    for cfg in (
+        PipelineConfig(output_dir=str(blocker), save_metadata=False),
+        PipelineConfig(output_dir=str(tmp_path), output_formats=["xml"]),
+    ):
+        res = run_pipeline(spark, cfg, {"ETHUSDT": good})
+        assert "error" in res["ETHUSDT"]
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        assert _persistent_rdds(spark) <= before
+
+
+def _root_executions(spark, after: int = -1) -> list:
+    """(id, physical plan text) of the session's top-level SQL
+    executions with an id above ``after`` (one per action)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(30_000)
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    out = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if e.executionId() > after and e.executionId() == e.rootExecutionId():
+            out.append((e.executionId(), e.physicalPlanDescription()))
+    return out
+
+
+_SPLIT_CASES = {
+    "chronological": {},
+    "random": {"split_method": "random"},
+    "by_time": {
+        "split_method": "by_time",
+        "split_train_end": "2025-01-02 00:00:00",
+        "split_val_end": "2025-01-02 12:00:00",
+    },
+}
+
+
+@pytest.mark.parametrize("split", sorted(_SPLIT_CASES))
+def test_observed_counts_are_exact(spark, tmp_path, split):
+    """Written datasets' counts are observed on one write each and equal
+    what reading the written files back counts; without sinks the
+    counts are the same and the symbol runs no more actions than the
+    report plus one count per dataset the split arithmetic cannot give."""
+    source = synthetic.synthetic_ohlcv(
+        spark, ["BTCUSDT"], "2025-01-01", "2025-01-03", 60, seed=7
+    ).drop("hour", "day_of_week", "month", "year")
+    cfg = PipelineConfig(
+        resample_to=["4h", "1d"],
+        output_dir=str(tmp_path),
+        output_formats=["parquet", "csv"],
+        **_SPLIT_CASES[split],
+    )
+    mark = max((i for i, _ in _root_executions(spark)), default=-1)
+    res = run_pipeline_single(spark, cfg, source, "BTCUSDT")
+    plans = [p for _, p in _root_executions(spark, mark)]
+    d = res["datasets"]
+    want = ["full", "resampled_4h", "resampled_1d", "train"]
+    want += ["val", "test"] if split == "by_time" else ["test"]
+    assert list(d) == want
+    for name, n in d.items():
+        path = str(tmp_path / "BTCUSDT" / f"{name}.parquet")
+        assert spark.read.parquet(path).count() == n, name
+    assert d["full"] > 0 and sum(d[n] for n in want[3:]) == d["full"]
+    assert sum("CollectMetrics" in p for p in plans) == len(want)
+
+    mark = max((i for i, _ in _root_executions(spark)), default=-1)
+    bare = run_pipeline_single(
+        spark, cfg.with_overrides(output_dir=None), source, "BTCUSDT"
+    )
+    assert bare["datasets"] == d and bare["paths"] == {}
+    # the parent's actions: the report, one count per resample, plus the
+    # split counts (chronological: none, random: one, by_time: two)
+    split_counts = {"chronological": 0, "random": 1, "by_time": 2}[split]
+    assert len(_root_executions(spark, mark)) <= 1 + 2 + split_counts
+
+
+def test_observed_counts_of_a_fully_dirty_input_are_zero(spark, tmp_path):
+    """Strict mode drops every row whose high is half its low: every
+    observed count, like the report's final rows, is 0."""
+    source = synthetic.synthetic_ohlcv(
+        spark, ["BTCUSDT"], "2025-01-01", "2025-01-02", 60, seed=3
+    ).withColumn("high", F.col("low") / 2)
+    cfg = PipelineConfig(
+        clean_mode="strict",
+        resample_to=["4h"],
+        output_dir=str(tmp_path),
+        output_formats=["parquet", "csv"],
+    )
+    res = run_pipeline_single(spark, cfg, source, "BTCUSDT")
+    assert res["validation_report"]["final_rows"] == 0
+    assert res["datasets"] == {
+        "full": 0, "resampled_4h": 0, "train": 0, "test": 0
+    }
+    for name in res["datasets"]:
+        path = str(tmp_path / "BTCUSDT" / f"{name}.parquet")
+        assert spark.read.parquet(path).count() == 0
+
+
 # ---------------------------------------------------------------------------
 # Streaming continuous aggregate
 # ---------------------------------------------------------------------------

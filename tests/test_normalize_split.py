@@ -2,10 +2,13 @@
 (reference model: ``tests/units/test_processing.py:28-70``,
 ``tests/units/test_data_splitter.py``)."""
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import DataFrame
 
 from financial_data_pipeline_spark.operators import normalize, splitter
 
@@ -54,6 +57,75 @@ def test_split_time_series_three_way(spark, ohlcv_df):
     n = ohlcv_df.count()
     assert tr.count() + va.count() + te.count() == n
     assert tr.count() == int(n * 0.7)
+
+
+def _last_job(spark) -> int:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def test_chronological_splits_build_without_jobs(spark, ohlcv_df):
+    """The cut is counted inside the rank window, so building a split
+    starts no Spark job (the driver-side count is gone)."""
+    before = _last_job(spark)
+    splitter.chronological_split(ohlcv_df, test_size=0.25)
+    splitter.split_time_series(ohlcv_df, 0.7, 0.15)
+    assert _last_job(spark) == before
+
+
+_TEST_SIZES = (0.1, 0.2, 0.25, 0.3, 1 / 3)
+
+
+def test_split_cut_equals_python_int(spark):
+    """The in-plan cut CAST(n * f AS BIGINT) equals int(n * f) for
+    every n in 1..200 and every fraction the two splitters cut at."""
+    fracs = [1 - t for t in _TEST_SIZES] + [(1 - t) + t / 2 for t in _TEST_SIZES]
+    rows = (
+        spark.range(1, 201)
+        .select(
+            F.col("id").alias("__n"),
+            *[splitter._cut(f).alias(f"c{i}") for i, f in enumerate(fracs)],
+        )
+        .collect()
+    )
+    assert len(rows) == 200
+    for r in rows:
+        for i, f in enumerate(fracs):
+            assert r[f"c{i}"] == int(r["__n"] * f), (r["__n"], f)
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 7, 10, 29, 30, 199, 200])
+def test_split_rows_match_pandas_cut(spark, n):
+    """Train (and val) rows of both chronological splitters equal a
+    pandas reference cut at int(n * (1 - t)) in (timestamp, other
+    columns) order, timestamp ties included, for every test size t."""
+    pdf = pd.DataFrame({"id": range(n)})
+    pdf["timestamp"] = pd.to_datetime(pdf["id"] // 3 * 60, unit="s")
+    df = spark.createDataFrame(pdf.sample(frac=1.0, random_state=n))
+    ids = pdf.sort_values(["timestamp", "id"])["id"].tolist()
+
+    def labelled(frames):
+        return {
+            (r.t, r.part, r.id)
+            for r in reduce(DataFrame.unionByName, frames).collect()
+        }
+
+    chrono, three_way, want_chrono, want_three = [], [], set(), set()
+    for i, t in enumerate(_TEST_SIZES):
+        train, _ = splitter.chronological_split(df, test_size=t)
+        chrono.append(train.select(F.lit(i).alias("t"), F.lit("train").alias("part"), "id"))
+        tr, va, _ = splitter.split_time_series(df, 1 - t, t / 2)
+        three_way += [
+            tr.select(F.lit(i).alias("t"), F.lit("train").alias("part"), "id"),
+            va.select(F.lit(i).alias("t"), F.lit("val").alias("part"), "id"),
+        ]
+        n_train, n_val = int(n * (1 - t)), int(n * ((1 - t) + t / 2))
+        want_chrono |= {(i, "train", x) for x in ids[:n_train]}
+        want_three |= {(i, "train", x) for x in ids[:n_train]}
+        want_three |= {(i, "val", x) for x in ids[n_train:n_val]}
+    assert labelled(chrono) == want_chrono
+    assert labelled(three_way) == want_three
 
 
 def test_random_split_properties(spark, ohlcv_df):
