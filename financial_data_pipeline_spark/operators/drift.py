@@ -47,6 +47,20 @@ def _melt(df: DataFrame, cols: list[str]) -> DataFrame:
     ).select("fv.feature", "fv.__v")
 
 
+def clamped_bin(v, lo, width, bins: int) -> "F.Column":
+    """Equal-width bin index ``floor((v - lo) / width)`` clamped into
+    ``0..bins-1``: values outside the reference range land in the edge
+    bins, and a null quotient (``width`` 0, or ``v`` null) in bin 0.
+    The clamp runs on ``floor``'s long result and the int cast comes
+    after it: ``floor`` saturates a huge quotient (a reference range a
+    few subnormals wide) to ``Long.MaxValue``, which an int cast with
+    ANSI off wraps to -1. Callers pick ``width`` for degenerate
+    ranges."""
+    return F.least(
+        F.lit(bins - 1), F.greatest(F.lit(0), F.floor((v - lo) / width))
+    ).cast("int")
+
+
 def _ordered_bin_fold(key_col: str, term) -> "F.Column":
     """Order-deterministic Σ term: left-fold over the bin-sorted list
     so Spark and any SQL oracle (``list_reduce(list(x ORDER BY bin))``)
@@ -95,13 +109,7 @@ def _hist_compact(
     width = (F.col("__hi") - F.col("__lo")) / F.lit(bins)
     bucket = F.when(
         F.col("__v").isNotNull(),
-        F.least(
-            F.lit(bins - 1),
-            F.greatest(
-                F.lit(0),
-                F.floor((F.col("__v") - F.col("__lo")) / width).cast("int"),
-            ),
-        ),
+        clamped_bin(F.col("__v"), F.col("__lo"), width, bins),
     )
     binned = (
         u.join(F.broadcast(stats), "feature")

@@ -18,27 +18,34 @@ answer (Iceberg/Delta, public designs) is METADATA versioning:
   Iceberg).
 
 Scope: append/overwrite commits, JSON manifests under
-``<root>/_manifests``. Writer concurrency is OPTIMISTIC: the
-version-named snapshot file is created with O_EXCL, so exactly one of
-two racing writers wins a version and the loser gets
-``CommitConflict`` to re-derive and retry (Delta's putIfAbsent-on-log
-commit point; maps to if-none-match puts on object stores). Verified
-guarantee (tests/test_laketable_multiprocess.py): two SEPARATE OS
-processes, each its own JVM/SparkSession, racing N commits each with
+``<root>/_manifests``, every metadata read and write going through the
+six ``MetaStore`` primitives of ``sources/metastore.py``. Writer
+concurrency is OPTIMISTIC. The commit point is ONE ``put_if_absent``
+of the complete version manifest (Delta's putIfAbsent on the log; a
+conditional put on object stores, a temp file hard-linked into place
+on POSIX). Exactly one of two racing writers wins a version, and the
+loser gets ``CommitConflict`` to re-derive and retry. A manifest is
+never visible empty or partial, so an unreadable one is never a live
+writer: readers skip it and ``expire_snapshots`` removes it. HEAD is a
+pointer written after the commit point; ``recover_head`` repairs it
+when a writer dies in between.
+
+Verified guarantee (tests/test_laketable_multiprocess.py): two SEPARATE
+OS processes, each its own JVM/SparkSession, racing N commits each with
 retry-on-conflict converge to exactly N+N consecutive committed
 versions with zero lost rows; the single-process race and the
-stage→publish window are covered in tests/test_laketable.py. A
-multi-engine catalog and full conflict CLASSIFICATION (disjoint-file
-merges could auto-retry) stay documented seams.
-The stats collection is ONE Spark job over the just-written files
-(parquet footer reads, no data scan).
+stage→publish window are covered in tests/test_laketable.py, and the
+crash matrix runs on both stores. A multi-engine catalog and full
+conflict CLASSIFICATION (disjoint-file merges could auto-retry) stay
+documented seams. Per-file stats come from the parquet footers on the
+driver with no Spark job; a Spark job over the just-written files runs
+only for Bloom columns or footers without exact statistics.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -48,18 +55,6 @@ from pyspark.sql import DataFrame, SparkSession
 from financial_data_pipeline_spark.sources.metastore import PosixMetaStore
 
 _MANIFEST_DIR = "_manifests"
-# an unreadable manifest older than this is a dead writer's debris
-# (the create→json-write window is milliseconds), not an in-flight
-# commit — see _committed_past / expire_snapshots
-# how long a listed-but-unreadable manifest must sit unchanged before
-# it is treated as a dead writer's debris rather than a live writer
-# mid-dump. Set WELL above any plausible stall (GC pause, suspended
-# process, slow FS) — a live writer reclassified as debris would have
-# its manifest unlinked under it by expire_snapshots. _advance's
-# post-dump liveness re-check closes that window even if a stall ever
-# exceeds this, so the constant only tunes how long genuine debris can
-# delay reclamation.
-_DEBRIS_AGE_S = 900.0
 _HEAD = "HEAD.json"
 
 
@@ -105,7 +100,7 @@ class Snapshot:
     # correct reconstruction for them (every writer derives from the
     # version directly below the one it claims).
     base: int = 0
-    # A commit that won its O_EXCL version file but then observed a
+    # A commit that won its version manifest but then observed a
     # concurrent publish() landing inside its create→HEAD window marks
     # ITSELF aborted instead of moving HEAD (see _advance's post-create
     # re-check). Aborted snapshots are not committed history: they
@@ -479,17 +474,6 @@ def _bloom_positions(value, seed_base: str) -> list[int]:
     return out
 
 
-def _bloom_hex(positions) -> str:
-    """Bit positions → fixed-width hex bitmap string (JSON-portable).
-    None positions (from NULL column values) are skipped — nulls are
-    never probeable via eq= so they need no bits."""
-    bits = 0
-    for p in positions:
-        if p is not None:
-            bits |= 1 << int(p)
-    return f"{bits:0{_BLOOM_BITS // 4}x}"
-
-
 def _bloom_contains(hex_bitmap: str, positions: list[int]) -> bool:
     bits = int(hex_bitmap, 16)
     return all((bits >> p) & 1 for p in positions)
@@ -517,12 +501,12 @@ class LakeTable:
         self.stat_cols = stat_cols
         # metadata-store seam (sources/metastore.py): every read/write
         # of the tiny JSON commit metadata goes through these
-        # primitives. Default is the POSIX impl (round-8 semantics);
-        # pass MemoryObjectMetaStore (or a real object-store impl with
+        # primitives. Default is the POSIX impl; pass
+        # MemoryObjectMetaStore (or a real object-store impl with
         # conditional puts) to run the SAME protocol on object-store
-        # semantics — the object-store crash matrix + OCC probe verify
-        # both. Data files stay on whatever Hadoop FileSystem Spark
-        # writes to — the seam covers the commit plane only.
+        # semantics — the crash matrix + OCC probe run on both. Data
+        # files stay on whatever Hadoop FileSystem Spark writes to —
+        # the seam covers the commit plane only.
         self.fs = fs if fs is not None else PosixMetaStore()
         # test-only fault-injection seam: the crash-matrix tests set
         # this to a callable that raises at a named step boundary
@@ -583,6 +567,16 @@ class LakeTable:
             base=d.get("base", d["version"] - 1),
             aborted=d.get("aborted", False),
         )
+
+    def _try_load_snapshot(self, version: int) -> "Snapshot | None":
+        """The snapshot, or None when its manifest is gone (a
+        concurrent vacuum won after the listing) or unreadable
+        (corrupt, or the empty file an older build's crashed writer
+        left) — neither is history."""
+        try:
+            return self._load_snapshot(version)
+        except (FileNotFoundError, json.JSONDecodeError, KeyError):
+            return None
 
     def _detached_path(self) -> str:
         return os.path.join(_mdir(self.root, self.fs), "detached.json")
@@ -654,14 +648,13 @@ class LakeTable:
         derive window cannot be silently built over. Staleness check:
         any committed (non-staged, non-aborted, non-detached) snapshot
         newer than ``base`` means the derivation is stale →
-        ``CommitConflict``. The O_EXCL create of the version-named file
-        then closes the remaining window where two writers pass the
-        check off the same listing — exactly one creates v{N} (the
-        putIfAbsent-on-log commit point Delta uses; maps to
-        if-none-match puts on object stores).
+        ``CommitConflict``. One ``put_if_absent`` of the complete
+        version manifest then closes the remaining window where two
+        writers pass the check off the same listing — exactly one
+        creates v{N} (the putIfAbsent-on-log commit point Delta uses).
 
-        Two plain commits can only race on the O_EXCL create (both
-        target the same next version). A concurrent ``publish`` is the
+        Two plain commits can only race on that put (both target the
+        same next version). A concurrent ``publish`` is the
         one writer that commits WITHOUT creating a version file (it
         flips an existing staged manifest), so the create alone cannot
         arbitrate against it: the staleness check is therefore RE-RUN
@@ -701,65 +694,21 @@ class LakeTable:
             "base": base,
         }
         self._fault("advance:pre_create")
-        if self.fs.partial_manifest_writes:
-            # POSIX path: O_EXCL create (the commit point), THEN the
-            # payload dump — the created-but-empty manifest is visible
-            # in between (the debris window all the quarantine /
-            # self-heal machinery below exists for).
-            try:
-                f = self.fs.create_exclusive(self._snapshot_path(version))
-            except FileExistsError:
-                raise CommitConflict(
-                    f"version {version} was committed concurrently; "
-                    "re-read HEAD and retry the commit against the new "
-                    "snapshot"
-                ) from None
-            self._fault("advance:post_create")  # the debris window
-            with f:
-                json.dump(payload, f)
-        else:
-            # Object-store path: ONE conditional put carries the whole
-            # payload (If-None-Match) — the commit point and the dump
-            # are the same atomic action, so the empty-manifest debris
-            # class cannot exist. advance:post_create still fires, but
-            # a crash there leaves a COMPLETE committed manifest (HEAD
-            # lags → recover_head), not debris — the object-store
-            # crash matrix pins that difference.
-            if not self.fs.put_if_absent(
-                self._snapshot_path(version), json.dumps(payload)
-            ):
-                raise CommitConflict(
-                    f"version {version} was committed concurrently; "
-                    "re-read HEAD and retry the commit against the new "
-                    "snapshot"
-                )
-            self._fault("advance:post_create")
-        self._fault("advance:post_dump")
-        # post-dump liveness check: a writer stalled long enough between
-        # its O_EXCL create and the json.dump (GC pause, suspended
-        # process, slow FS) can have its still-empty manifest classified
-        # as aged debris and unlinked by a concurrent expire_snapshots —
-        # the dump above then lands in an UNLINKED inode. Moving HEAD to
-        # (or later publishing) a nonexistent manifest would brick reads
-        # until the next commit, so re-verify the path before declaring
-        # success. (_DEBRIS_AGE_S is also set well above any plausible
-        # stall; expire_snapshots additionally re-checks unreadability
-        # and age immediately before its unlink, and the post-HEAD
-        # self-heal below re-dumps the payload if the unlink still
-        # slipped between this check and the HEAD move.)
-        if not self.fs.exists(self._snapshot_path(version)):
+        if not self.fs.put_if_absent(
+            self._snapshot_path(version), json.dumps(payload)
+        ):
             raise CommitConflict(
-                f"manifest for version {version} was reclaimed as debris "
-                "by a concurrent expire_snapshots while this commit was "
-                "stalled mid-write; the commit did not land — re-read "
-                "HEAD and retry"
+                f"version {version} was committed concurrently; "
+                "re-read HEAD and retry the commit against the new "
+                "snapshot"
             )
+        self._fault("advance:post_create")
         if move_head:
             # post-create re-check: a concurrent publish() flipping a
             # staged snapshot in the scan→create window is the one
-            # commit the O_EXCL create cannot arbitrate against — if
-            # one landed, abort THIS commit (flag the manifest, leave
-            # HEAD alone) instead of overwriting the published HEAD
+            # commit put_if_absent cannot arbitrate against — if one
+            # landed, abort THIS commit (flag the manifest, leave HEAD
+            # alone) instead of overwriting the published HEAD
             late = self._committed_past(base, exclude=version)
             if late:
                 self._set_snapshot_flag(version, "aborted", True)
@@ -772,25 +721,6 @@ class LakeTable:
             self._fault("advance:pre_head")
             self._write_head(version)
             self._fault("advance:post_head")
-            # post-HEAD self-heal: a concurrent expire_snapshots that
-            # classified this manifest as debris BEFORE the dump above
-            # can still reclaim it between the existence re-check and
-            # the HEAD move. We own this version number (the O_EXCL
-            # winner), so atomically re-materialize the payload. This
-            # heal and expire's rename-then-recheck reclaim protocol
-            # together terminate the race: expire reclaims by RENAME
-            # and re-reads HEAD after it — if HEAD already names this
-            # version it restores the manifest (the dump landed in the
-            # renamed inode — we hold the fd); if HEAD moves after
-            # expire's re-read, this heal re-creates the payload at the
-            # original path, which the reclaim never touches again. A
-            # readable manifest is never re-classified as debris, so
-            # every interleaving ends with HEAD naming a readable
-            # manifest.
-            if not self.fs.exists(self._snapshot_path(version)):
-                self.fs.put_atomic(
-                    self._snapshot_path(version), json.dumps(payload)
-                )
         return version
 
     def _committed_past(
@@ -800,37 +730,19 @@ class LakeTable:
         predicate shared by _advance (pre- and post-create) and
         publish (pre- and post-flip). Staged (WAP branches), aborted
         (lost publish races) and detached (rolled-back) snapshots are
-        not committed history. A listed-but-unreadable manifest is an
-        in-flight concurrent commit and counts as committed (the
-        conservative reading — callers raise and retry) — UNLESS it has
-        been unreadable for longer than ``_DEBRIS_AGE_S``: a writer
-        that died between its O_EXCL create and the json write leaves
-        permanent debris, and counting that as committed forever would
-        wedge the table behind a CommitConflict that advises retrying
-        (retries could never succeed). Aged debris is skipped here and
-        reclaimed by ``expire_snapshots``."""
+        not committed history, and neither is an unreadable manifest:
+        ``put_if_absent`` lands manifests whole, so one that does not
+        parse is corrupt or a crashed older-build writer's empty file,
+        never a commit in flight."""
         detached = self._detached()
         out = []
         for v in self.snapshots():
             if v <= base or v == exclude or v in detached:
                 continue
-            try:
-                s = self._load_snapshot(v)
-            except FileNotFoundError:
-                continue  # expired by a concurrent vacuum after listing
-            except (json.JSONDecodeError, KeyError):
-                if self._manifest_age(v) > _DEBRIS_AGE_S:
-                    continue  # dead writer's debris, not history
-                out.append(v)  # mid-write by a live concurrent committer
-                continue
-            if not s.staged and not s.aborted:
+            s = self._try_load_snapshot(v)
+            if s is not None and not s.staged and not s.aborted:
                 out.append(v)
         return out
-
-    def _manifest_age(self, version: int) -> float:
-        """Seconds since the manifest file was last written; +inf when
-        it vanished (a concurrent vacuum won — certainly not mid-write)."""
-        return self.fs.age_seconds(self._snapshot_path(version))
 
     def _set_snapshot_flag(self, version: int, key: str, value) -> None:
         """Atomically rewrite one manifest field (write-temp +
@@ -946,25 +858,7 @@ class LakeTable:
         new version. ``overwrite`` only redefines VISIBILITY (the new
         snapshot lists only the new files) — old files stay on disk for
         time travel until ``expire_snapshots`` reclaims them."""
-        if mode not in ("append", "overwrite"):
-            raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-        if mode == "append":
-            self._check_schema_compat(df)
-        self._enforce_constraints(df)
-        # capture the base ONCE: carried files and the claimed version
-        # must derive from the same head, or a commit landing between
-        # the two reads is silently built over (lost update)
-        base = self.head_version()
-        # carried files are read before the write job, while a
-        # concurrent expire_snapshots cannot yet have deleted the base
-        carried = (
-            self._load_snapshot(base).files
-            if mode == "append" and base > 0
-            else []
-        )
-        new = self._write_files(df)
-        self._fault("commit:post_write_files")
-        return self._advance(mode, carried + new, app_meta, base=base)
+        return self._write_snapshot(df, mode, app_meta, move_head=True)
 
     def stage(
         self,
@@ -989,21 +883,34 @@ class LakeTable:
         snapshots so an in-flight WAP audit can't be destroyed by a
         concurrent retention run).
         """
+        return self._write_snapshot(df, mode, app_meta, move_head=False)
+
+    def _write_snapshot(
+        self, df: DataFrame, mode: str, app_meta: dict | None, move_head: bool
+    ) -> int:
+        """The body commit and stage share; only the HEAD move differs."""
         if mode not in ("append", "overwrite"):
             raise ValueError(f"mode must be append|overwrite, got {mode!r}")
         if mode == "append":
             self._check_schema_compat(df)
         self._enforce_constraints(df)
+        # capture the base ONCE: carried files and the claimed version
+        # must derive from the same head, or a commit landing between
+        # the two reads is silently built over (lost update)
         base = self.head_version()
-        carried = (  # read before the write job, as in commit
+        # carried files are read before the write job, while a
+        # concurrent expire_snapshots cannot yet have deleted the base
+        carried = (
             self._load_snapshot(base).files
             if mode == "append" and base > 0
             else []
         )
         new = self._write_files(df)
-        self._fault("stage:post_write_files")
+        self._fault(
+            ("commit" if move_head else "stage") + ":post_write_files"
+        )
         return self._advance(
-            mode, carried + new, app_meta, move_head=False, base=base
+            mode, carried + new, app_meta, move_head=move_head, base=base
         )
 
     def publish(self, version: int, force: bool = False) -> None:
@@ -1024,7 +931,7 @@ class LakeTable:
         must rebase or fail). The flip of the ``staged`` flag is the
         commit point, and the staleness check is re-run AFTER it
         (un-flipping and raising on a late conflict); ``_advance``
-        runs the mirror-image re-check after its O_EXCL create, so a
+        runs the mirror-image re-check after its manifest put, so a
         commit racing publish itself cannot be silently detached — at
         most one side passes both of its checks (each side's re-check
         happens-after the other's commit action; both may abort and
@@ -1055,7 +962,7 @@ class LakeTable:
             self.fs.put_atomic(snap_path, flipped)
             self._fault("publish:post_flip")
             if not force:
-                # post-flip re-check: a commit whose O_EXCL create
+                # post-flip re-check: a commit whose manifest put
                 # landed inside the scan→flip window — un-flip (the
                 # stage stays re-publishable) and surface the conflict
                 late = self._committed_past(base, exclude=version)
@@ -1293,57 +1200,13 @@ class LakeTable:
         are reclaimed explicitly with ``keep_staged=False`` once no
         publish is pending. Returns deleted paths.
 
-        Robust against the concurrent states the OCC check tolerates:
-        a manifest mid-write by a live committer is KEPT untouched
-        this round; aged-out unreadable debris (a writer that died
-        between O_EXCL create and the json write — see
-        ``_committed_past``) is reclaimed as a bare manifest (its data
-        files were never referenced by any readable snapshot; they age
-        out with orphan retention). The vacuum never aborts mid-run on
-        either state."""
-        # sweep quarantine leftovers: an expire that died between its
-        # debris rename and the remove leaves v*.json.debris files —
-        # invisible to snapshots()/readers, reclaim them once aged.
-        # But NOT unconditionally: if a prior expire crashed between
-        # the debris rename and its HEAD re-check below, and the
-        # stalled writer had already dumped and moved HEAD (its
-        # post-HEAD self-heal saw the manifest present pre-rename, so
-        # it did not re-materialize), the .debris file is the ONLY
-        # copy of an acknowledged commit's manifest. Restore it to its
-        # original path when HEAD still names that version and the
-        # manifest is absent — exactly mirroring the inline head==v
-        # restore in the reclaim loop — and only remove otherwise.
-        mdir = _mdir(self.root, self.fs)
-        for p in self.fs.list_names(mdir):
-            if p.endswith(".json.debris"):
-                full = os.path.join(mdir, p)
-                m = re.match(r"^v(\d+)\.json\.debris$", p)
-                dv = int(m.group(1)) if m else -1
-                orig = self._snapshot_path(dv) if dv >= 0 else None
-                try:
-                    if (
-                        orig is not None
-                        and self.head_version() == dv
-                        and not self.fs.exists(orig)
-                    ):
-                        self.fs.rename(full, orig)  # acknowledged commit
-                        continue
-                    if self.fs.age_seconds(full) > _DEBRIS_AGE_S:
-                        self.fs.remove(full)
-                except (OSError, FileNotFoundError):
-                    pass  # concurrent sweep won
+        A manifest that vanished after the listing (a concurrent vacuum
+        won) is skipped, and an unreadable one is not history (see
+        ``_committed_past``): it is removed whatever ``keep_last`` says,
+        and data files only it might name are left to orphan retention.
+        The vacuum never aborts mid-run on either state."""
         versions = self.snapshots()
-        snaps: dict[int, "Snapshot | None"] = {}
-        debris: list[int] = []
-        for v in versions:
-            try:
-                snaps[v] = self._load_snapshot(v)
-            except FileNotFoundError:
-                snaps[v] = None  # concurrent vacuum won
-            except (json.JSONDecodeError, KeyError):
-                snaps[v] = None
-                if self._manifest_age(v) > _DEBRIS_AGE_S:
-                    debris.append(v)  # dead writer — reclaimable
+        snaps = {v: self._try_load_snapshot(v) for v in versions}
         keep = (
             set(versions[-keep_last:])
             | {self.head_version()}
@@ -1353,11 +1216,7 @@ class LakeTable:
             keep |= {
                 v for v, s in snaps.items() if s is not None and s.staged
             }
-        drop = [
-            v
-            for v in versions
-            if (v not in keep and snaps.get(v) is not None) or v in debris
-        ]
+        drop = [v for v in versions if v not in keep or snaps[v] is None]
         live = set()
         for v in keep:
             if snaps.get(v) is not None:
@@ -1366,60 +1225,13 @@ class LakeTable:
         for v in drop:
             # data-plane delete: parquet files live on the real
             # filesystem Spark wrote them to (not the metadata seam)
-            for fs in snaps[v].files if snaps.get(v) is not None else []:
+            for fs in snaps[v].files if snaps[v] is not None else []:
                 if fs.path not in live and os.path.exists(fs.path):
                     os.remove(fs.path)
                     _FILE_SCHEMA_MEMO.pop(fs.path, None)
                     deleted.append(fs.path)
                     self._fault("expire:mid_data_delete")
             self._fault("expire:pre_manifest_delete")
-            if v in debris:
-                # TOCTOU re-check: the debris classification above may
-                # be minutes old by the time this loop reaches it (data
-                # files of other snapshots are deleted in between). If
-                # the stalled writer completed its json.dump since, the
-                # manifest is now readable — a COMMIT, not debris —
-                # and unlinking it would strand HEAD on a missing
-                # manifest. Re-verify unreadability AND age (a fresh
-                # mtime means a writer is alive on it) immediately
-                # before the reclaim.
-                try:
-                    self._load_snapshot(v)
-                    continue  # writer finished — this is history now
-                except FileNotFoundError:
-                    continue  # concurrent vacuum won
-                except (json.JSONDecodeError, KeyError):
-                    if self._manifest_age(v) <= _DEBRIS_AGE_S:
-                        continue  # mtime moved — writer still alive
-                # Reclaim via RENAME, not unlink, then re-read HEAD.
-                # The residual race the re-check above cannot see: the
-                # stalled writer dumps AFTER it, passes its own
-                # existence re-check, and moves HEAD — an unlink here
-                # would strand HEAD on a missing manifest and silently
-                # lose the acknowledged commit. The rename closes it:
-                # the writer holds the open fd, so a dump completed
-                # before the rename landed in the renamed inode intact;
-                # if HEAD already names v the commit is acknowledged →
-                # restore the (complete) manifest and keep it. If HEAD
-                # does not name v yet, either the writer never passed
-                # its existence re-check (it raises "did not land" —
-                # reclaim is consistent) or it is between that check
-                # and the HEAD move — its post-HEAD self-heal then
-                # re-materializes the payload at the original path
-                # (see _advance), which this reclaim never touches.
-                self._fault("expire:pre_debris_reclaim")
-                quarantined = self._snapshot_path(v) + ".debris"
-                try:
-                    self.fs.rename(self._snapshot_path(v), quarantined)
-                except FileNotFoundError:
-                    continue  # concurrent vacuum won
-                self._fault("expire:post_debris_rename")
-                if self.head_version() == v:
-                    self.fs.rename(quarantined, self._snapshot_path(v))
-                    continue  # acknowledged commit — history, not debris
-                self.fs.remove(quarantined)
-                self._fault("expire:post_manifest_delete")
-                continue
             try:
                 self.fs.remove(self._snapshot_path(v))
             except FileNotFoundError:
@@ -1429,7 +1241,7 @@ class LakeTable:
 
     def recover_head(self) -> int:
         """Crash repair: HEAD is a convenience pointer written AFTER
-        the real commit point (the manifest dump — see ``_advance``),
+        the real commit point (the manifest put — see ``_advance``),
         so a writer dying between the two leaves a committed snapshot
         HEAD doesn't name. That snapshot is real history — later
         writers correctly see it in the staleness check and conflict —
@@ -1439,84 +1251,54 @@ class LakeTable:
         reachable from the current head: a candidate is promoted only
         when its recorded ``base`` equals the head being repaired (then
         the next candidate must chain from IT, and so on). The chain
-        check is what makes recovery safe against the one race O_EXCL
-        cannot arbitrate: a crashed commit that lost a publish race has
-        ``base`` pointing BELOW the published head, and blindly
-        promoting it would silently drop the published snapshot's files
-        from the live view — such an orphan is skipped (later writers
-        conflict against it via the staleness check until it ages into
-        debris or is rolled back explicitly).
+        check is what makes recovery safe against the one race the
+        manifest put cannot arbitrate: a crashed commit that lost a
+        publish race has ``base`` pointing BELOW the published head,
+        and blindly promoting it would silently drop the published
+        snapshot's files from the live view — such an orphan is skipped
+        (later writers conflict against it via the staleness check
+        until it is rolled back explicitly).
 
-        If HEAD itself names an unreadable manifest (a stalled writer's
-        snapshot reclaimed as debris after HEAD moved), fall back to
-        the newest readable committed snapshot below it: the lost
-        commit's manifest is gone, so pointing at the last intact
-        history is the only repair that leaves the table readable. A
-        committed snapshot whose recorded ``base`` EQUALS the lost head
-        (a writer that derived from it, dumped its manifest, then died
-        before moving HEAD) is still chained history — it passed its
-        own staleness checks against the lost version — so the chain
-        walk bridges the gap and promotes it; skipping it would move
-        HEAD backwards below a readable committed snapshot and wedge
-        every future commit behind a CommitConflict against it.
+        If HEAD itself names a missing or unreadable manifest, fall
+        back to the newest readable committed snapshot below it. A
+        ``rollback`` racing ``expire_snapshots`` leaves that state: the
+        vacuum reads HEAD once, before it deletes, so a rollback to a
+        version it is dropping points HEAD at a manifest the vacuum
+        then removes. Pointing at the last intact history is the only
+        repair that leaves the table readable. A committed snapshot
+        whose recorded ``base`` EQUALS the lost head (a writer that
+        derived from it, put its manifest, then died before moving
+        HEAD) is still chained history — it passed its own staleness
+        checks against the lost version — so the chain walk bridges
+        the gap and promotes it; skipping it would move HEAD backwards
+        below a readable committed snapshot and wedge every future
+        commit behind a CommitConflict against it.
 
         Safe to run any time: a no-op when HEAD is current and
         readable. Returns the (possibly repaired) head version. The
         crash-matrix test drives every writer death window through this
         recovery."""
         head = self.head_version()
+        detached = self._detached()
+        committed = []  # (version, base), ascending
+        for v in self.snapshots():
+            s = None if v in detached else self._try_load_snapshot(v)
+            if s is not None and not s.staged and not s.aborted:
+                committed.append((v, s.base))
         best = head
         lost = None
-        detached = self._detached()
-        if head > 0:
-            head_lost = False
-            try:
-                self._load_snapshot(head)
-            except FileNotFoundError:
-                # Before demoting, check the debris quarantine: an
-                # expire that crashed between its debris rename and the
-                # HEAD re-check leaves the acknowledged head manifest
-                # parked at v*.json.debris — restoring it IS the repair
-                # (no history is lost), demotion is the last resort.
-                debris_twin = self._snapshot_path(head) + ".debris"
-                head_lost = True
-                if self.fs.exists(debris_twin):
-                    try:
-                        self.fs.rename(debris_twin, self._snapshot_path(head))
-                        self._load_snapshot(head)
-                        head_lost = False
-                    except (OSError, json.JSONDecodeError, KeyError):
-                        head_lost = True
-            except (json.JSONDecodeError, KeyError):
-                head_lost = True
-            if head_lost:
-                lost = head  # the reclaimed version — a chain bridge
-                readable = []
-                for v in self.snapshots():
-                    if v >= head or v in detached:
-                        continue
-                    try:
-                        s = self._load_snapshot(v)
-                    except (FileNotFoundError, json.JSONDecodeError, KeyError):
-                        continue
-                    if not s.staged and not s.aborted:
-                        readable.append(v)
-                best = max(readable, default=0)
-        for v in self.snapshots():
-            if v <= best or v in detached:
+        if head > 0 and self._try_load_snapshot(head) is None:
+            lost = head  # the vanished version — a chain bridge
+            best = max((v for v, _ in committed if v < head), default=0)
+        for v, base in committed:
+            if v <= best:
                 continue
-            try:
-                s = self._load_snapshot(v)
-            except (FileNotFoundError, json.JSONDecodeError, KeyError):
-                continue  # debris / mid-write — not committed history
-            if s.staged or s.aborted:
-                continue
-            if s.base == best:
+            if base == best:
                 best = v
-            elif lost is not None and s.base == lost and v > lost:
-                # bridge through the reclaimed head: this snapshot
-                # committed over the lost version (it passed staleness
-                # checks against it), so it IS the chain's continuation.
+            elif lost is not None and base == lost and v > lost:
+                # bridge through the lost head: this snapshot committed
+                # over the lost version (it passed staleness checks
+                # against it), so it IS the chain's continuation.
                 # Consume the bridge — at most one non-aborted snapshot
                 # can legitimately chain from any one base (the second
                 # racer's post-create re-check marks it aborted), and

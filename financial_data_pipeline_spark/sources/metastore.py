@@ -1,37 +1,32 @@
 """Metadata-store seam for the lake commit protocol.
 
-``laketable.py``'s OCC protocol needs exactly six primitives over the
-tiny JSON metadata files under ``<root>/_manifests``:
+``laketable.py``'s OCC protocol touches the tiny JSON metadata files
+under ``<root>/_manifests`` through exactly six primitives, the
+``MetaStore`` interface:
 
-- conditional create (the commit point — ``putIfAbsent`` on the log),
-- atomic overwrite (HEAD / manifest flag flips — readers must see the
-  old or the new bytes, never a torn mix),
-- read, list, remove, and a two-ended rename (the debris quarantine).
+- ``makedirs(d)`` — make the metadata directory (a no-op on stores
+  without directories);
+- ``get(path)`` — full contents, ``FileNotFoundError`` when absent;
+- ``put_atomic(path, data)`` — overwrite; readers see the old or the
+  new bytes, never a torn mix (HEAD, flag flips, tags, constraints);
+- ``put_if_absent(path, data)`` — create the COMPLETE object or report
+  that another writer won: the commit point (``putIfAbsent`` on the
+  log, the Delta/Iceberg design);
+- ``list_names(d)`` — names directly under a directory/prefix;
+- ``remove(path)`` — delete, ``FileNotFoundError`` when absent.
 
-Round 8 bound those directly to ``os.open(O_EXCL)`` / ``os.replace`` /
-``os.listdir``, which made the lake local-disk/NFS-only — the VERDICT's
-last un-retired 100 TB design risk. This module extracts the primitives
-behind ``MetaStore`` with two implementations:
+Both stores give ``put_if_absent`` the same contract: a version
+manifest appears whole or not at all, so a crashed writer leaves
+nothing behind in the listing and the protocol has one commit path.
 
-- :class:`PosixMetaStore` — the round-8 behavior, bit-for-bit: O_EXCL
-  create (which leaves a VISIBLE EMPTY file until the JSON dump lands —
-  the "debris window" the protocol's quarantine/self-heal machinery
-  exists for), atomic ``rename(2)`` for overwrite and quarantine.
+- :class:`PosixMetaStore` — local disk / NFS. The payload goes to a
+  uniquely named temp file in the same directory, which is then
+  ``link(2)``-ed to the target: the link is atomic and fails with
+  ``EEXIST`` when the target exists.
 - :class:`MemoryObjectMetaStore` — object-store SEMANTICS, in memory:
-  objects appear atomically and COMPLETE (``put_if_absent`` carries the
-  whole payload — S3/GCS conditional put via If-None-Match, strongly
-  consistent since 2020/always respectively), plain PUT is an atomic
-  overwrite, and there is NO rename — ``rename`` is copy-then-delete
-  with an injectable hook between the two steps so tests can freeze a
-  sweeper inside the non-atomic window. ``create_exclusive`` does not
-  exist on object stores and raises.
-
-The capability flag ``partial_manifest_writes`` is what the protocol
-branches on: with fused conditional puts the empty-manifest debris
-class is STRUCTURALLY IMPOSSIBLE (a crashed writer leaves nothing, not
-a husk), so the debris quarantine/self-heal paths become dormant
-no-ops — verified by the object-store crash matrix in
-``tests/test_laketable_objectstore.py``.
+  S3/GCS conditional put (If-None-Match), atomic whole-object PUT, no
+  rename. The protocol tests run on it to show the lake needs nothing
+  an object store lacks.
 
 Only the METADATA plane goes through this seam. Data files (parquet)
 are written by Spark through whatever Hadoop FileSystem the path maps
@@ -44,22 +39,14 @@ file follows the public Delta/Iceberg commit-protocol designs.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import threading
-import time
 import uuid
 
 
 class PosixMetaStore:
-    """POSIX-primitive implementation — the round-8 semantics.
-
-    ``create_exclusive`` is ``open(path, 'x')``: the commit point, but
-    the created file is visible (empty) before the payload lands, so
-    the debris machinery in ``laketable.py`` stays load-bearing.
-    """
-
-    #: O_EXCL-created manifests are briefly visible and empty/partial.
-    partial_manifest_writes = True
+    """The ``MetaStore`` primitives over a POSIX filesystem."""
 
     def makedirs(self, d: str) -> None:
         os.makedirs(d, exist_ok=True)
@@ -78,78 +65,47 @@ class PosixMetaStore:
             f.write(data)
         os.replace(tmp, path)
 
-    def create_exclusive(self, path: str):
-        """O_EXCL create; returns the writable file object. Raises
-        FileExistsError when another writer won."""
-        return open(path, "x")
-
     def put_if_absent(self, path: str, data: str) -> bool:
-        """Fused conditional put (create + full payload). Provided for
-        interface completeness; the protocol uses ``create_exclusive``
-        on stores that support partial writes so its fault points keep
-        their round-8 meaning."""
+        """Create ``path`` holding the whole of ``data``, or return
+        False when it already exists. The payload is written to a temp
+        file first and hard-linked into place, so the name never
+        appears empty or partial; the temp name is always removed."""
+        tmp = path + f".tmp.{uuid.uuid4().hex}"
         try:
-            f = open(path, "x")
-        except FileExistsError:
-            return False
-        with f:
-            f.write(data)
-        return True
+            with open(tmp, "w") as f:
+                f.write(data)
+            try:
+                os.link(tmp, path)
+            except FileExistsError:
+                return False
+            return True
+        finally:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(tmp)
 
     def list_names(self, d: str) -> list[str]:
         return os.listdir(d)
 
-    def exists(self, path: str) -> bool:
-        return os.path.exists(path)
-
     def remove(self, path: str) -> None:
         os.remove(path)
-
-    def rename(self, src: str, dst: str) -> None:
-        """Atomic on POSIX — the debris quarantine relies on the
-        renamed inode staying writable through a stalled writer's held
-        fd (see laketable.py's expire reclaim protocol)."""
-        os.replace(src, dst)
-
-    def age_seconds(self, path: str) -> float:
-        """Seconds since last write; +inf when the path vanished."""
-        try:
-            return time.time() - os.path.getmtime(path)
-        except OSError:
-            return float("inf")
 
 
 class MemoryObjectMetaStore:
     """In-memory store with OBJECT-STORE semantics, for protocol tests.
 
-    Models the commit-relevant behaviors of S3/GCS/ABFS:
-
-    - objects appear atomically and complete — there is no
-      create-then-fill, so ``create_exclusive`` raises and the protocol
-      must use the fused ``put_if_absent`` (conditional put,
-      If-None-Match) — atomic under the per-store lock;
-    - plain PUT (``put_atomic``) atomically replaces the object — no
-      temp file needed, readers see old or new bytes;
-    - there is NO rename: ``rename`` is copy-then-delete with a
-      visible window where BOTH names exist; ``rename_hook`` (if set)
-      runs between the copy and the delete so tests can interleave a
-      concurrent reader/writer inside that window;
-    - per-object mtimes for the age/debris checks.
+    Models the commit-relevant behaviors of S3/GCS/ABFS: objects appear
+    atomically and complete (``put_if_absent`` is the conditional put,
+    If-None-Match), and a plain PUT (``put_atomic``) atomically
+    replaces an object with no temp file. There is no rename.
 
     Thread-safe: one lock serializes mutations (an object store's
     per-key atomicity). Paths are plain strings — the store ignores
     directory structure except for prefix listing.
     """
 
-    partial_manifest_writes = False
-
     def __init__(self) -> None:
         self._objects: dict[str, str] = {}
-        self._mtimes: dict[str, float] = {}
         self._lock = threading.Lock()
-        #: test seam: callable run between the copy and delete halves
-        #: of ``rename`` (the non-atomic window object stores have)
-        self.rename_hook = None
 
     def makedirs(self, d: str) -> None:  # no directories on a store
         pass
@@ -164,14 +120,6 @@ class MemoryObjectMetaStore:
     def put_atomic(self, path: str, data: str) -> None:
         with self._lock:
             self._objects[path] = data
-            self._mtimes[path] = time.time()
-
-    def create_exclusive(self, path: str):
-        raise NotImplementedError(
-            "object stores have no O_EXCL create-then-fill; use "
-            "put_if_absent (conditional put) — laketable branches on "
-            "partial_manifest_writes"
-        )
 
     def put_if_absent(self, path: str, data: str) -> bool:
         """Conditional put (If-None-Match: *): atomically creates the
@@ -180,7 +128,6 @@ class MemoryObjectMetaStore:
             if path in self._objects:
                 return False
             self._objects[path] = data
-            self._mtimes[path] = time.time()
             return True
 
     def list_names(self, d: str) -> list[str]:
@@ -192,44 +139,8 @@ class MemoryObjectMetaStore:
                 if p.startswith(prefix) and "/" not in p[len(prefix):]
             )
 
-    def exists(self, path: str) -> bool:
-        with self._lock:
-            return path in self._objects
-
     def remove(self, path: str) -> None:
         with self._lock:
             if path not in self._objects:
                 raise FileNotFoundError(path)
             del self._objects[path]
-            self._mtimes.pop(path, None)
-
-    def rename(self, src: str, dst: str) -> None:
-        """COPY + DELETE — the object-store reality. Non-atomic: after
-        the copy both names exist until the delete lands; a crash (or
-        the rename_hook raising) between the two leaves BOTH. The
-        protocol paths that rename (debris quarantine) must tolerate
-        that, which the object-store crash matrix asserts."""
-        with self._lock:
-            if src not in self._objects:
-                raise FileNotFoundError(src)
-            self._objects[dst] = self._objects[src]
-            self._mtimes[dst] = time.time()
-        if self.rename_hook is not None:
-            self.rename_hook(src, dst)
-        with self._lock:
-            self._objects.pop(src, None)
-            self._mtimes.pop(src, None)
-
-    def age_seconds(self, path: str) -> float:
-        with self._lock:
-            try:
-                return time.time() - self._mtimes[path]
-            except KeyError:
-                return float("inf")
-
-    # test helpers ----------------------------------------------------
-    def backdate(self, path: str, seconds: float) -> None:
-        """Age an object (debris-age tests)."""
-        with self._lock:
-            if path in self._mtimes:
-                self._mtimes[path] -= seconds

@@ -31,6 +31,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from financial_data_pipeline_spark.operators.drift import clamped_bin
+
 
 def freeze_reference(ref: DataFrame, col: str, bins: int = 10) -> dict:
     """Snapshot the reference distribution: ``{lo, hi, bins, counts}``.
@@ -38,12 +40,7 @@ def freeze_reference(ref: DataFrame, col: str, bins: int = 10) -> dict:
     ``bins`` longs on the driver, the whole deploy artifact."""
     lo, hi = ref.agg(F.min(col), F.max(col)).first()
     width = (hi - lo) / bins if hi != lo else 1.0
-    bucket = F.least(
-        F.lit(bins - 1),
-        F.greatest(
-            F.lit(0), F.floor((F.col(col) - F.lit(lo)) / F.lit(width)).cast("int")
-        ),
-    )
+    bucket = clamped_bin(F.col(col), F.lit(lo), F.lit(width), bins)
     rows = ref.select(bucket.alias("bin")).groupBy("bin").count().collect()
     counts = [0] * bins
     for r in rows:
@@ -65,12 +62,7 @@ def streaming_psi(
     bins = reference["bins"]
     lo, hi = reference["lo"], reference["hi"]
     width = (hi - lo) / bins if hi != lo else 1.0
-    bucket = F.least(
-        F.lit(bins - 1),
-        F.greatest(
-            F.lit(0), F.floor((F.col(col) - F.lit(lo)) / F.lit(width)).cast("int")
-        ),
-    )
+    bucket = clamped_bin(F.col(col), F.lit(lo), F.lit(width), bins)
     counts = [
         F.sum((bucket == i).cast("long")).alias(f"__n_{i}") for i in range(bins)
     ]
@@ -120,12 +112,7 @@ def streaming_js(
     bins = reference["bins"]
     lo, hi = reference["lo"], reference["hi"]
     width = (hi - lo) / bins if hi != lo else 1.0
-    bucket = F.least(
-        F.lit(bins - 1),
-        F.greatest(
-            F.lit(0), F.floor((F.col(col) - F.lit(lo)) / F.lit(width)).cast("int")
-        ),
-    )
+    bucket = clamped_bin(F.col(col), F.lit(lo), F.lit(width), bins)
     counts = [
         F.sum((bucket == i).cast("long")).alias(f"__n_{i}") for i in range(bins)
     ]
@@ -184,12 +171,7 @@ def streaming_chi2(
     bins = reference["bins"]
     lo, hi = reference["lo"], reference["hi"]
     width = (hi - lo) / bins if hi != lo else 1.0
-    bucket = F.least(
-        F.lit(bins - 1),
-        F.greatest(
-            F.lit(0), F.floor((F.col(col) - F.lit(lo)) / F.lit(width)).cast("int")
-        ),
-    )
+    bucket = clamped_bin(F.col(col), F.lit(lo), F.lit(width), bins)
     counts = [
         F.sum((bucket == i).cast("long")).alias(f"__n_{i}") for i in range(bins)
     ]

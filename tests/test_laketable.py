@@ -781,38 +781,24 @@ def test_publish_racing_commit_unflips_and_raises(spark, tmp_path):
     assert t.head_version() == staged
 
 
-def test_debris_manifest_aging(spark, table, tmp_path):
-    """A writer that dies between its O_EXCL manifest create and the
-    json write leaves an unreadable version file. While FRESH it is
-    treated as an in-flight commit (conservative CommitConflict);
-    once AGED past the debris horizon it stops wedging the table —
-    commits succeed past it and the vacuum reclaims the bare manifest
-    without aborting."""
+def test_empty_manifest_is_not_history(spark, table):
+    """An empty version manifest, as a writer of the older
+    create-then-dump protocol left it when it died between the two
+    steps, is not history: the next commit lands past it with no wait,
+    and the vacuum removes it whatever ``keep_last`` says."""
     import os
-    import time as _time
-
-    from financial_data_pipeline_spark.sources import laketable as lt
-    from financial_data_pipeline_spark.sources.laketable import CommitConflict
 
     table.commit(_batch(spark, 0, 2, "a"))  # v1
-    # simulate the dead writer: an EMPTY v2 manifest
-    debris = table._snapshot_path(2)
-    open(debris, "x").close()
+    empty = table._snapshot_path(2)
+    open(empty, "x").close()
 
-    # fresh debris = maybe mid-write: conservative conflict
-    with pytest.raises(CommitConflict):
-        table.commit(_batch(spark, 2, 3, "b"))
-
-    # age it out: the table un-wedges (no retry loop spins forever)
-    old = _time.time() - lt._DEBRIS_AGE_S - 5
-    os.utime(debris, (old, old))
     v = table.commit(_batch(spark, 2, 3, "b"))
-    assert v == 3  # numbered PAST the debris, never overwriting it
+    assert v == 3  # numbered PAST the empty file, never overwriting it
     assert table.read().count() == 300
+    assert table.recover_head() == 3
 
-    # the vacuum reclaims the bare manifest instead of crashing
-    deleted = table.expire_snapshots(keep_last=10)
-    assert not os.path.exists(debris)
+    table.expire_snapshots(keep_last=10)
+    assert not os.path.exists(empty)
     assert table.snapshots() == [1, 3]
     assert table.read().count() == 300
     assert all(os.path.exists(p) for p in table.pruned_files())
@@ -921,34 +907,6 @@ def test_delete_empty_keys_is_metadata_only(spark, table):
     assert v == head + 1
     assert set(table.pruned_files()) == before  # same paths — no rewrite
     assert table.read().count() == 200
-
-
-def test_advance_aborts_when_manifest_reclaimed_mid_dump(spark, table):
-    """The debris race: a writer stalled between its O_EXCL create and
-    json.dump long enough for a concurrent expire_snapshots to reclaim
-    its manifest as aged debris finishes its dump into an UNLINKED
-    inode. The post-dump liveness check must refuse to move HEAD to the
-    vanished manifest (reads would break until the next commit)."""
-    import os
-
-    from financial_data_pipeline_spark.sources.laketable import CommitConflict
-
-    table.commit(_batch(spark, 0, 2, "a"))  # v1
-    head_before = table.head_version()
-
-    def kill_manifest(point):
-        if point == "advance:post_dump":
-            os.remove(table._snapshot_path(2))  # the concurrent expire
-
-    table.fault_hook = kill_manifest
-    with pytest.raises(CommitConflict, match="reclaimed as debris"):
-        table.commit(_batch(spark, 2, 3, "b"))
-    table.fault_hook = None
-    # HEAD never moved; the table reads fine and the next commit lands
-    assert table.head_version() == head_before
-    assert table.read().count() == 200
-    table.commit(_batch(spark, 2, 3, "b"))
-    assert table.read().count() == 300
 
 
 def test_commit_survives_vacuum_of_its_base(spark, tmp_path, monkeypatch):

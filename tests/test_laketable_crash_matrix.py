@@ -3,30 +3,38 @@ boundary of commit / stage / publish / keyed-rewrite / compact /
 expire (the ``fault_hook`` seam in laketable.py) and assert the table
 
 1. stays READABLE at a consistent snapshot (never partial),
-2. is RECOVERABLE — the documented repair (retry, debris aging,
-   ``recover_head``, re-running the operation) brings it fully
-   current, and
+2. is RECOVERABLE — the documented repair (retry, ``recover_head``,
+   re-running the operation) brings it fully current, and
 3. never loses a commit that passed its commit point (the manifest
-   dump) nor surfaces one that didn't.
+   put) nor surfaces one that didn't.
 
-This systematizes round-5's single-window debris test across the whole
-protocol surface."""
+The commit matrix runs on both metadata stores with one expectation
+table: the manifest put lands the whole manifest on each, so a crash
+leaves the same state on each."""
 
 from __future__ import annotations
 
 import os
-import time as _time
 
 import pytest
 from pyspark.sql import functions as F
 
-from financial_data_pipeline_spark.sources import laketable as lt
 from financial_data_pipeline_spark.sources.laketable import (
     CommitConflict,
     LakeTable,
     compact,
     orphan_files,
 )
+from financial_data_pipeline_spark.sources.metastore import (
+    MemoryObjectMetaStore,
+)
+
+# fs=None is the POSIX default; the memory store has object-store
+# semantics (conditional puts, no rename)
+_STORES = [
+    pytest.param(lambda: None, id="posix"),
+    pytest.param(MemoryObjectMetaStore, id="objectstore"),
+]
 
 
 class _Killed(RuntimeError):
@@ -58,25 +66,22 @@ def table(spark, tmp_path):
     return LakeTable(spark, str(tmp_path / "tbl"), stat_cols=["day"])
 
 
-def _age_debris(table: LakeTable, version: int) -> None:
-    old = _time.time() - lt._DEBRIS_AGE_S - 5
-    p = table._snapshot_path(version)
-    os.utime(p, (old, old))
-
-
 # (fault point, did the crashed commit pass its commit point?)
 _COMMIT_POINTS = [
     ("commit:post_write_files", False),
     ("advance:pre_create", False),
-    ("advance:post_create", False),  # empty-manifest debris window
-    ("advance:post_dump", True),  # committed, HEAD lags
+    ("advance:post_create", True),  # complete manifest, HEAD lags
     ("advance:pre_head", True),
     ("advance:post_head", True),  # fully landed, death after success
 ]
 
 
 @pytest.mark.parametrize("point,committed", _COMMIT_POINTS)
-def test_commit_crash_matrix(spark, table, point, committed):
+@pytest.mark.parametrize("mk_store", _STORES)
+def test_commit_crash_matrix(spark, tmp_path, mk_store, point, committed):
+    table = LakeTable(
+        spark, str(tmp_path / "tbl"), stat_cols=["day"], fs=mk_store()
+    )
     table.commit(_batch(spark, 0, 1, "base"))  # v1
     _arm(table, point)
     with pytest.raises(_Killed):
@@ -87,20 +92,10 @@ def test_commit_crash_matrix(spark, table, point, committed):
     assert table.read().count() in (100, 200)
 
     # 2. recovery per window
-    if point == "advance:post_create":
-        # empty-manifest debris: fresh → conservative conflict (maybe
-        # a live writer mid-dump); aged → skipped and reclaimable
-        with pytest.raises(CommitConflict):
-            table.commit(_batch(spark, 2, 3, "next"))
-        _age_debris(table, 2)
-        table.commit(_batch(spark, 2, 3, "next"))
-        assert table.read().count() == 200  # crashed batch never landed
-        table.expire_snapshots(keep_last=10)
-        assert not os.path.exists(table._snapshot_path(2))
-    elif committed and point != "advance:post_head":
-        # manifest dumped = COMMITTED; HEAD lags → writers conflict
-        # until recover_head repairs the pointer (never silently drops
-        # the committed batch)
+    if committed and point != "advance:post_head":
+        # manifest put = COMMITTED; HEAD lags → writers conflict until
+        # recover_head repairs the pointer (never silently drops the
+        # committed batch)
         assert table.read().count() == 100  # still the old view
         with pytest.raises(CommitConflict):
             table.commit(_batch(spark, 2, 3, "next"))
@@ -113,8 +108,10 @@ def test_commit_crash_matrix(spark, table, point, committed):
         table.commit(_batch(spark, 2, 3, "next"))
         assert table.read().count() == 300
     else:
-        # nothing durable happened except (maybe) orphan data files
+        # nothing durable in the metadata plane; at most orphan data
+        # files
         assert table.read().count() == 100
+        assert table.snapshots() == [1]
         table.commit(_batch(spark, 2, 3, "next"))
         assert table.read().count() == 200
         if point == "commit:post_write_files":

@@ -3,11 +3,11 @@ SparkSessions) racing N commits each into one LakeTable root.
 
 The single-process race test (test_laketable.py) proves the staleness
 check fires; this proves the whole retry protocol CONVERGES across real
-process boundaries — the O_EXCL manifest create is the commit point, so
-exactly 2N committed versions exist afterward, every writer's rows are
-present (zero lost updates), and version numbers never collide. This is
-the verified guarantee the LakeTable docstring claims for concurrent
-writers.
+process boundaries — the manifest put (a temp file hard-linked to the
+version name) is the commit point, so exactly 2N committed versions
+exist afterward, every writer's rows are present (zero lost updates),
+and version numbers never collide. This is the verified guarantee the
+LakeTable docstring claims for concurrent writers.
 """
 
 from __future__ import annotations

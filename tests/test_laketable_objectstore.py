@@ -1,30 +1,26 @@
 """The lake commit protocol on OBJECT-STORE semantics.
 
-Round 8's verdict named the lake's POSIX coupling (O_EXCL create,
-atomic rename) as the last un-retired 100 TB design risk: production
-lakes live on S3/GCS/ABFS, which have conditional puts and atomic
-whole-object PUTs but NO rename and NO create-then-fill. The
-``MetaStore`` seam (sources/metastore.py) extracts the protocol's
-primitives; this file runs the protocol against
-``MemoryObjectMetaStore`` — in-memory, but with the store's semantics:
+Round 8's verdict named the lake's POSIX coupling as the last
+un-retired 100 TB design risk: production lakes live on S3/GCS/ABFS,
+which have conditional puts and atomic whole-object PUTs but NO rename
+and NO create-then-fill. The ``MetaStore`` seam (sources/metastore.py)
+extracts the protocol's six primitives; this file runs the protocol
+against ``MemoryObjectMetaStore`` — in-memory, but with the store's
+semantics (conditional put as the commit point, atomic overwrite PUTs
+for HEAD and flag flips, no temp files).
 
-- fused conditional put as the commit point (If-None-Match) — the
-  empty-manifest debris class is STRUCTURALLY IMPOSSIBLE, so the crash
-  matrix expectations differ from POSIX at ``advance:post_create``
-  (complete committed manifest + lagging HEAD, not debris);
-- atomic overwrite PUTs for HEAD / flag flips (no temp files);
-- copy-then-delete ``rename`` with a visible both-names window.
-
-Covers: the commit crash matrix (object-store expectations), WAP
-stage/publish, rollback + time travel, expire/vacuum, the OCC
-multi-writer race (threads — one store instance, like one bucket), a
-torn-HEAD reader probe, and the rename-window behavior. The
-multiprocess leg stays POSIX-only (an in-memory store cannot span
-processes; a real bucket is the multi-process store)."""
+Covers: the conditional put under racing threads (on both stores),
+WAP stage/publish, rollback + time travel, expire/vacuum, the OCC
+multi-writer race (threads — one store instance, like one bucket) and
+a torn-HEAD reader probe. The commit crash matrix runs on both stores
+in test_laketable_crash_matrix.py. The multiprocess leg stays
+POSIX-only (an in-memory store cannot span processes; a real bucket is
+the multi-process store)."""
 
 from __future__ import annotations
 
-import json
+import os
+import sys
 import threading
 
 import pytest
@@ -33,7 +29,6 @@ from pyspark.sql import functions as F
 from financial_data_pipeline_spark.sources.laketable import (
     CommitConflict,
     LakeTable,
-    orphan_files,
 )
 from financial_data_pipeline_spark.sources.metastore import (
     MemoryObjectMetaStore,
@@ -82,117 +77,46 @@ def table(spark, tmp_path, store):
 # ---------------------------------------------------------------------------
 
 
-def test_put_if_absent_is_atomic_under_threads(store):
+@pytest.mark.parametrize(
+    "mk_store",
+    [
+        pytest.param(PosixMetaStore, id="posix"),
+        pytest.param(MemoryObjectMetaStore, id="objectstore"),
+    ],
+)
+def test_put_if_absent_is_atomic_under_threads(tmp_path, mk_store):
+    """16 threads race one conditional put: exactly one wins, the
+    object holds that winner's COMPLETE payload, and no temp file is
+    left beside it."""
+    store = mk_store()
+    mdir = str(tmp_path / "_manifests")
+    store.makedirs(mdir)
+    path = os.path.join(mdir, "v000001.json")
+    payloads = [f"w{i}:" + "x" * 65536 for i in range(16)]
+    start = threading.Barrier(len(payloads))
     wins = []
 
     def race(i):
-        if store.put_if_absent("/t/_manifests/v000001.json", f"w{i}"):
+        start.wait()
+        if store.put_if_absent(path, payloads[i]):
             wins.append(i)
 
-    threads = [threading.Thread(target=race, args=(i,)) for i in range(16)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
+    threads = [
+        threading.Thread(target=race, args=(i,)) for i in range(16)
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
     assert len(wins) == 1  # exactly one conditional put succeeds
-    assert store.get("/t/_manifests/v000001.json") == f"w{wins[0]}"
-
-
-def test_rename_window_shows_both_names(store):
-    store.put_atomic("/t/a", "x")
-    seen = {}
-
-    def hook(src, dst):
-        seen["src"] = store.exists(src)
-        seen["dst"] = store.exists(dst)
-
-    store.rename_hook = hook
-    store.rename("/t/a", "/t/b")
-    assert seen == {"src": True, "dst": True}  # the non-atomic window
-    assert not store.exists("/t/a") and store.get("/t/b") == "x"
-
-
-def test_create_exclusive_is_unavailable(store):
-    with pytest.raises(NotImplementedError):
-        store.create_exclusive("/t/x")
-
-
-# ---------------------------------------------------------------------------
-# crash matrix — object-store expectations
-# ---------------------------------------------------------------------------
-
-# (fault point, did the crashed commit pass its commit point?)
-# Differs from the POSIX matrix at advance:post_create: the conditional
-# put landed the COMPLETE manifest, so the commit is durable (HEAD
-# lags; recover_head repairs) — there is no debris window.
-_COMMIT_POINTS = [
-    ("commit:post_write_files", False),
-    ("advance:pre_create", False),
-    ("advance:post_create", True),  # complete manifest — committed
-    ("advance:post_dump", True),
-    ("advance:pre_head", True),
-    ("advance:post_head", True),
-]
-
-
-@pytest.mark.parametrize("point,committed", _COMMIT_POINTS)
-def test_commit_crash_matrix_objectstore(spark, table, point, committed):
-    table.commit(_batch(spark, 0, 1, "base"))  # v1
-    _arm(table, point)
-    with pytest.raises(_Killed):
-        table.commit(_batch(spark, 1, 2, "crashed"))
-    table.fault_hook = None
-
-    # 1. readable at a consistent snapshot
-    assert table.read().count() in (100, 200)
-
-    # 2. recovery per window
-    if committed and point != "advance:post_head":
-        # complete manifest, lagging HEAD: writers conflict until
-        # recover_head promotes the committed snapshot
-        assert table.read().count() == 100
-        with pytest.raises(CommitConflict):
-            table.commit(_batch(spark, 2, 3, "next"))
-        assert table.recover_head() == 2
-        assert table.read().count() == 200
-        table.commit(_batch(spark, 2, 3, "next"))
-        assert table.read().count() == 300
-    elif point == "advance:post_head":
-        assert table.read().count() == 200
-        table.commit(_batch(spark, 2, 3, "next"))
-        assert table.read().count() == 300
-    else:
-        # nothing durable in the metadata plane — no husk, no debris
-        assert table.read().count() == 100
-        assert table.snapshots() == [1]
-        table.commit(_batch(spark, 2, 3, "next"))
-        assert table.read().count() == 200
-        if point == "commit:post_write_files":
-            orphans = orphan_files(table)
-            assert orphans
-            for p in orphans:
-                assert p not in set(table.pruned_files())
-
-    head = table.head_version()
-    assert table.recover_head() == head  # idempotent once current
-
-
-def test_no_debris_class_on_objectstore(spark, table):
-    """The POSIX matrix's post_create window leaves an empty manifest
-    (debris) that conservatively blocks the next commit until aged.
-    On the store the same crash leaves a COMPLETE committed manifest —
-    the next commit conflicts for the OPPOSITE reason (real committed
-    history), and recover_head (not debris aging) is the repair."""
-    table.commit(_batch(spark, 0, 1, "base"))
-    _arm(table, "advance:post_create")
-    with pytest.raises(_Killed):
-        table.commit(_batch(spark, 1, 2, "crashed"))
-    table.fault_hook = None
-    # the manifest is readable, not a husk
-    snap = json.loads(table.fs.get(table._snapshot_path(2)))
-    assert snap["version"] == 2 and snap["files"]
-    assert table.recover_head() == 2
-    assert table.read().count() == 200
+    assert store.get(path) == payloads[wins[0]]
+    assert store.list_names(mdir) == ["v000001.json"]  # no .tmp. left
 
 
 # ---------------------------------------------------------------------------
@@ -336,4 +260,3 @@ def test_no_torn_head_reads_objectstore(spark, tmp_path, store):
 def test_posix_store_is_default(spark, tmp_path):
     t = LakeTable(spark, str(tmp_path / "tbl"), stat_cols=["day"])
     assert isinstance(t.fs, PosixMetaStore)
-    assert t.fs.partial_manifest_writes

@@ -9,12 +9,15 @@ dedup determinism, salted-join equivalence.
 import numpy as np
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 SETTINGS = dict(
     max_examples=5,
     deadline=None,
+    # a fixed example sequence per test, so every run draws the same
+    # inputs (found failures stay pinned below as @example)
+    derandomize=True,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 
@@ -707,6 +710,10 @@ def test_aqe_splits_planted_skew_join(spark):
         max_size=40,
     ),
 )
+# a reference range one float32 subnormal wide: the bin quotient of 1.0
+# saturates floor() at Long.MaxValue, which an int cast before the
+# clamp wrapped to -1 (bin 0 instead of bin 9)
+@example(ref_vals=[0.0, 2.0**-149], new_vals=[0.0, 1.0])
 def test_hist_compact_psi_matches_bruteforce(spark, ref_vals, new_vals):
     """The compact drift histogram (map of occupied bins + sequence
     fold) must agree with a brute-force Python replay of the PSI

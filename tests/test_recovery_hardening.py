@@ -5,10 +5,10 @@ review pass found in the new recovery machinery.
    commit that lost a publish race (its recorded base below the
    published head) must never be promoted, or the published snapshot's
    files silently vanish from the live view.
-2. ``recover_head`` must repair a HEAD pointing at an unreadable
-   manifest (stalled-writer snapshot reclaimed as debris after the
-   HEAD move) by falling back to the newest readable committed
-   snapshot.
+2. ``recover_head`` must repair a HEAD pointing at a missing
+   manifest (a ``rollback`` racing ``expire_snapshots``, which reads
+   HEAD once before it deletes) by falling back to the newest readable
+   committed snapshot.
 3. ``refresh_rollup``'s watermark must be monotone under racing
    refreshers: a slow refresher landing after a fast one must not drag
    the mark backwards (regressed marks force redundant recompute and,
@@ -18,9 +18,7 @@ review pass found in the new recovery machinery.
 from __future__ import annotations
 
 import json
-import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from financial_data_pipeline_spark.sources.laketable import LakeTable
@@ -42,13 +40,13 @@ def _batch(spark, lo, hi, tag="t"):
 def _orphan_manifest(
     table: LakeTable, version: int, base: int, donor: int | None = None
 ) -> None:
-    """Hand-craft the artifact of the one race O_EXCL cannot arbitrate:
-    a committed-looking manifest whose recorded base predates the
-    current head (its writer passed the pre-create staleness check
+    """Hand-craft the artifact of the one race the manifest put cannot
+    arbitrate: a committed-looking manifest whose recorded base
+    predates the current head (its writer passed the pre-create staleness check
     before a concurrent publish landed, then died before the
     post-create re-check could mark it aborted). ``donor`` names the
     snapshot to copy the file list from when ``base`` itself is not a
-    readable snapshot (the reclaimed-head bridge scenario)."""
+    readable snapshot (the lost-head bridge scenario)."""
     donor = table._load_snapshot(
         donor if donor is not None else (base if base > 0 else 1)
     )
@@ -87,10 +85,14 @@ def test_recover_head_skips_orphan_off_the_base_chain(spark, tmp_path):
 
 
 def test_recover_head_repairs_unreadable_head_manifest(spark, tmp_path):
+    """HEAD names a version whose manifest is gone: a ``rollback`` to
+    v3 raced an ``expire_snapshots`` that read HEAD before the rollback
+    and then deleted v3. Recovery falls back to the newest readable
+    committed snapshot."""
     t = LakeTable(spark, str(tmp_path / "tbl"), stat_cols=["day"])
     t.commit(_batch(spark, 0, 50, "a"))  # v1
     t.commit(_batch(spark, 50, 80, "b"))  # v2
-    # simulate: HEAD moved to v3, then v3's manifest was reclaimed
+    # simulate: HEAD rolled to v3, then the vacuum deleted v3
     with open(t._head_path(), "w") as f:
         json.dump({"version": 3}, f)
     assert t.recover_head() == 2, "fall back to newest readable commit"
@@ -248,16 +250,18 @@ def test_refresh_watermark_monotone_on_metadata_only_path(
 
 
 def test_recover_head_bridges_through_reclaimed_head(spark, tmp_path):
-    """The wedge (round-6 ADVICE, medium): HEAD names unreadable
-    debris (v3), and a snapshot committed with base == that lost head
-    (v4 — its writer crashed post-dump, pre-HEAD-move). The fallback
-    must promote THROUGH the gap to v4, not fall back below it: moving
-    HEAD to v2 would leave committed v4 permanently conflicting every
-    future commit via the staleness check."""
+    """The wedge (round-6 ADVICE, medium): HEAD names v3, whose
+    manifest a vacuum deleted after a ``rollback`` to v3 raced it (the
+    vacuum reads HEAD once, before it deletes), and a snapshot
+    committed with base == that lost head (v4 — its writer put its
+    manifest, then died before moving HEAD). The fallback must promote
+    THROUGH the gap to v4, not fall back below it: moving HEAD to v2
+    would leave committed v4 permanently conflicting every future
+    commit via the staleness check."""
     t = LakeTable(spark, str(tmp_path / "tbl"), stat_cols=["day"])
     t.commit(_batch(spark, 0, 50, "a"))  # v1
     t.commit(_batch(spark, 50, 80, "b"))  # v2
-    # v3: the lost head — manifest reclaimed after HEAD moved
+    # v3: the lost head — manifest deleted after HEAD moved
     with open(t._head_path(), "w") as f:
         json.dump({"version": 3}, f)
     # v4: committed with base == 3, writer died before moving HEAD
@@ -279,195 +283,6 @@ def test_recover_head_bridges_through_reclaimed_head(spark, tmp_path):
         json.dump({"version": 3}, f)
     _orphan_manifest(t2, 4, base=1)  # base below the lost head
     assert t2.recover_head() == 2, "off-chain orphan must not win"
-
-
-def test_expire_restores_manifest_when_head_moved_after_recheck(
-    spark, tmp_path
-):
-    """The residual reclaim race (round-6 ADVICE, medium): the stalled
-    writer completes its dump AND moves HEAD after expire's TOCTOU
-    re-check but before the reclaim. The rename-then-recheck protocol
-    must notice HEAD == v and restore the manifest (the dump landed in
-    the renamed inode) instead of unlinking the acknowledged commit."""
-    import time as _time
-
-    from financial_data_pipeline_spark.sources import laketable as lt
-
-    t = LakeTable(spark, str(tmp_path / "tbl"), stat_cols=["day"])
-    t.commit(_batch(spark, 0, 50, "a"))  # v1
-    t.commit(_batch(spark, 50, 80, "b"))  # v2
-
-    path = t._snapshot_path(3)
-    open(path, "x").close()
-    old = _time.time() - lt._DEBRIS_AGE_S - 5
-    os.utime(path, (old, old))
-
-    # the writer wakes INSIDE the reclaim window: AFTER expire's
-    # TOCTOU re-check (the expire:pre_debris_reclaim fault point fires
-    # between the re-check and the rename) it completes its dump,
-    # passes its own existence re-check, and moves HEAD — the exact
-    # interleaving an unlink-based reclaim would turn into a silently
-    # lost acknowledged commit
-    def wake(point):
-        if point == "expire:pre_debris_reclaim" and os.path.getsize(path) == 0:
-            _orphan_manifest(t, 3, base=2)
-            with open(t._head_path(), "w") as f:
-                json.dump({"version": 3}, f)
-
-    t.fault_hook = wake
-    t.expire_snapshots(keep_last=1)
-    t.fault_hook = None
-
-    # the acknowledged commit survived: HEAD readable, manifest intact
-    assert t.head_version() == 3
-    assert os.path.getsize(path) > 0
-    t._load_snapshot(3)
-    assert t.read().count() == 80
-    assert not os.path.exists(path + ".debris")
-
-
-def test_expire_sweeps_aged_debris_quarantine(spark, tmp_path):
-    """A crashed expire leaves v*.json.debris quarantine files; the
-    next expire reclaims them once aged (and never before)."""
-    import time as _time
-
-    from financial_data_pipeline_spark.sources import laketable as lt
-
-    t = LakeTable(spark, str(tmp_path / "tbl"), stat_cols=["day"])
-    t.commit(_batch(spark, 0, 50, "a"))
-    q = t._snapshot_path(9) + ".debris"
-    open(q, "x").close()
-    t.expire_snapshots(keep_last=1)
-    assert os.path.exists(q), "fresh quarantine must not be swept"
-    old = _time.time() - lt._DEBRIS_AGE_S - 5
-    os.utime(q, (old, old))
-    t.expire_snapshots(keep_last=1)
-    assert not os.path.exists(q), "aged quarantine is reclaimed"
-
-
-def test_expire_spares_manifest_completed_after_debris_classification(
-    spark, tmp_path, monkeypatch
-):
-    """The expire-side TOCTOU re-check: a manifest classified as debris
-    but COMPLETED by its (stalled) writer before the unlink is spared."""
-    import time as _time
-
-    from financial_data_pipeline_spark.sources import laketable as lt
-
-    t = LakeTable(spark, str(tmp_path / "tbl"), stat_cols=["day"])
-    t.commit(_batch(spark, 0, 50, "a"))  # v1
-    t.commit(_batch(spark, 50, 80, "b"))  # v2
-
-    # dead-writer debris: empty manifest aged past the horizon
-    path = t._snapshot_path(3)
-    open(path, "x").close()
-    old = _time.time() - lt._DEBRIS_AGE_S - 5
-    os.utime(path, (old, old))
-
-    # the moment expire reaches the pre-delete fault point, the writer
-    # "wakes up" and completes its dump (a real commit with base=2)
-    def wake(point):
-        if point == "expire:pre_manifest_delete" and os.path.getsize(path) == 0:
-            _orphan_manifest(t, 3, base=2)
-
-    t.fault_hook = wake
-    t.expire_snapshots(keep_last=1)
-    t.fault_hook = None
-
-    # the completed manifest survived and recover_head can promote it
-    assert os.path.getsize(path) > 0
-    assert 3 in t.snapshots()
-    assert t.recover_head() == 3
-
-
-def test_sweep_restores_debris_of_acknowledged_head(spark, tmp_path):
-    """Round-8 ADVICE (medium): an expire that crashes between the
-    debris rename and its HEAD re-check — after the stalled writer
-    dumped and moved HEAD — leaves the .debris file as the ONLY copy
-    of an acknowledged commit's manifest. The aged-debris quarantine
-    sweep must RESTORE it (HEAD names the version, manifest absent),
-    never reclaim it; reclaiming would demote HEAD below a committed
-    snapshot and silently lose the acknowledged commit."""
-    import time as _time
-
-    from financial_data_pipeline_spark.sources import laketable as lt
-
-    t = LakeTable(spark, str(tmp_path / "tbl"), stat_cols=["day"])
-    t.commit(_batch(spark, 0, 50, "a"))  # v1
-    t.commit(_batch(spark, 50, 80, "b"))  # v2
-
-    # dead-writer debris: empty manifest aged past the horizon
-    path = t._snapshot_path(3)
-    open(path, "x").close()
-    old = _time.time() - lt._DEBRIS_AGE_S - 5
-    os.utime(path, (old, old))
-
-    class _Died(Exception):
-        pass
-
-    # interleaving: writer completes dump + moves HEAD inside the
-    # reclaim window (after the TOCTOU re-check), then expire dies
-    # right after the debris rename — before its HEAD re-read.
-    def wake_then_die(point):
-        if point == "expire:pre_debris_reclaim" and os.path.getsize(path) == 0:
-            _orphan_manifest(t, 3, base=2)
-            with open(t._head_path(), "w") as f:
-                json.dump({"version": 3}, f)
-        if point == "expire:post_debris_rename":
-            raise _Died(point)
-
-    t.fault_hook = wake_then_die
-    with pytest.raises(_Died):
-        t.expire_snapshots(keep_last=1)
-    t.fault_hook = None
-
-    # crash state: HEAD==3, manifest gone, .debris is the only copy
-    assert t.head_version() == 3
-    assert not os.path.exists(path)
-    q = path + ".debris"
-    assert os.path.exists(q) and os.path.getsize(q) > 0
-    old = _time.time() - lt._DEBRIS_AGE_S - 5
-    os.utime(q, (old, old))  # age it — the sweep must STILL restore
-
-    t.expire_snapshots(keep_last=1)  # the sweep runs first
-
-    assert os.path.exists(path), "sweep must restore, not reclaim"
-    assert not os.path.exists(q)
-    assert t.head_version() == 3
-    t._load_snapshot(3)
-    assert t.read().count() == 80
-    # and the table is not wedged
-    assert t.commit(_batch(spark, 80, 90, "c")) == 4
-
-
-def test_recover_head_restores_debris_twin_before_demoting(
-    spark, tmp_path
-):
-    """recover_head on the same crash state (HEAD names a version whose
-    manifest is parked at v*.json.debris): restore the quarantined
-    manifest instead of demoting HEAD below the acknowledged commit."""
-    t = LakeTable(spark, str(tmp_path / "tbl"), stat_cols=["day"])
-    t.commit(_batch(spark, 0, 50, "a"))  # v1
-    t.commit(_batch(spark, 50, 80, "b"))  # v2
-    _orphan_manifest(t, 3, base=2)
-    with open(t._head_path(), "w") as f:
-        json.dump({"version": 3}, f)
-    # expire crashed post-rename: manifest parked in quarantine
-    os.replace(t._snapshot_path(3), t._snapshot_path(3) + ".debris")
-
-    assert t.recover_head() == 3, "debris twin is the repair, not demotion"
-    assert os.path.exists(t._snapshot_path(3))
-    assert not os.path.exists(t._snapshot_path(3) + ".debris")
-    assert t.read().count() == 80
-
-    # control: unreadable debris twin (writer never dumped) still demotes
-    t2 = LakeTable(spark, str(tmp_path / "tbl2"), stat_cols=["day"])
-    t2.commit(_batch(spark, 0, 50, "a"))  # v1
-    t2.commit(_batch(spark, 50, 80, "b"))  # v2
-    open(t2._snapshot_path(3) + ".debris", "x").close()
-    with open(t2._head_path(), "w") as f:
-        json.dump({"version": 3}, f)
-    assert t2.recover_head() == 2, "empty debris twin cannot be promoted"
 
 
 def _gap_counters():

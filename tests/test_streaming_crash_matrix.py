@@ -9,11 +9,7 @@ streaming query fails and is restarted):
 
 - ``lake_sink:pre_commit``     — neither lake nor checkpoint committed;
                                   restart re-delivers and commits once.
-- ``advance:post_create``      — torn lake commit: empty manifest
-                                  (debris). Restart conflicts until the
-                                  debris ages out (conservative OCC
-                                  reading), then lands a fresh commit.
-- ``advance:post_dump``        — manifest complete, HEAD not moved.
+- ``advance:post_create``      — manifest complete, HEAD not moved.
 - ``advance:pre_head``         — same window, later instant.
                                   Both: restart conflicts against the
                                   orphan; ``recover_head`` promotes it
@@ -27,13 +23,11 @@ streaming query fails and is restarted):
 from __future__ import annotations
 
 import datetime as dt
-import time as _time
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from financial_data_pipeline_spark.sources import laketable as lt
 from financial_data_pipeline_spark.sources.laketable import LakeTable
 from financial_data_pipeline_spark.sources.rollup import refresh_rollup
 from financial_data_pipeline_spark.streaming.dedup_stream import (
@@ -84,16 +78,13 @@ def _kill_once_at(point: str):
 CRASH_POINTS = [
     "lake_sink:pre_commit",
     "advance:post_create",
-    "advance:post_dump",
     "advance:pre_head",
     "lake_sink:post_commit",
 ]
 
 
 @pytest.mark.parametrize("point", CRASH_POINTS)
-def test_lake_sink_exactly_once_across_crash(
-    spark, tmp_path, monkeypatch, point
-):
+def test_lake_sink_exactly_once_across_crash(spark, tmp_path, point):
     """Kill the ingest at ``point`` mid-batch, restart, and assert the
     table equals the batch twin — every input row exactly once."""
     src, ckpt = tmp_path / "src", str(tmp_path / "ckpt")
@@ -112,20 +103,7 @@ def test_lake_sink_exactly_once_across_crash(
     table.fault_hook = None
 
     # restart from the same checkpoint; recovery per death window:
-    if point == "advance:post_create":
-        # the torn commit left aged-out-able debris; until it ages the
-        # OCC check conservatively treats it as an in-flight commit
-        monkeypatch.setattr(lt, "_DEBRIS_AGE_S", 0.5)
-        deadline = _time.time() + 30
-        while True:
-            try:
-                stream_to_lake(_stream(spark, str(src / "*")), table, ckpt, "q1")
-                break
-            except Exception:
-                if _time.time() > deadline:
-                    raise
-                _time.sleep(0.6)
-    elif point in ("advance:post_dump", "advance:pre_head"):
+    if point in ("advance:post_create", "advance:pre_head"):
         # manifest committed but HEAD not moved: the replay conflicts
         # against the orphan until recover_head promotes it — after
         # which the promoted snapshot's ledger makes the replay a no-op
