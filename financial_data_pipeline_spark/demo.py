@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+from contextlib import ExitStack
 
 from pyspark.sql import functions as F
 
@@ -38,6 +39,7 @@ def main() -> int:
         chronological_split,
     )
     from financial_data_pipeline_spark.operators.stats import quality_score
+    from financial_data_pipeline_spark.plans.pipeline import pin
     from financial_data_pipeline_spark.plans.report import staged_report
     from financial_data_pipeline_spark.sources.laketable import LakeTable
     from financial_data_pipeline_spark.sources.readers import read_archive
@@ -47,6 +49,7 @@ def main() -> int:
     spark = get_spark(app_name="fdp-demo", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     workdir = tempfile.mkdtemp(prefix="fdp_demo_")
+    pins = ExitStack()
     try:
         # 1. Extract — deterministic synthetic OHLCV (no network; the
         # REST providers in sources/providers.py are the live path)
@@ -73,10 +76,11 @@ def main() -> int:
 
         # 2. Clean — the reference's 13-step validate_and_clean as ONE
         # lazy staged frame (dedup, coerce, impute, IQR clip, OHLC
-        # repair), persisted once: the cleaned rows and the report
-        # both read it
+        # repair), pinned as a local checkpoint: the cleaned rows and
+        # the report both read its stored rows, and the pin is released
+        # when the demo ends
         _banner("2. clean: 13-step pipeline, one staged frame")
-        staged = stage_ohlcv(raw, mode="repair").cache()
+        staged = pins.enter_context(pin(stage_ohlcv(raw, mode="repair")))
         clean = cleaned_from_staged(staged)
         n_clean = clean.count()
         print(f"rows after clean: {n_clean} (removed {n_raw - n_clean})")
@@ -271,6 +275,7 @@ def main() -> int:
         _banner("done: every stage exited cleanly")
         return 0
     finally:
+        pins.close()
         shutil.rmtree(workdir, ignore_errors=True)
 
 

@@ -120,8 +120,10 @@ def generate_multiple_timeframes(
 ) -> dict[str, DataFrame]:
     """Multi-timeframe fan-out (``timeframe_aggregator.py:97-115``).
 
-    Returns a dict of *lazy* plans over one shared base; callers should
-    ``df.cache()`` the base before materializing several of them.
+    Returns a dict of *lazy* plans over one shared base; callers that
+    materialize several of them should build them over a pin of the
+    base, ``with plans.pipeline.pin(df) as base:``, rather than over
+    ``df.cache()`` (RUNBOOK "Global settings").
     """
     return {tf: resample_ohlcv(df, tf, **kwargs) for tf in timeframes}
 

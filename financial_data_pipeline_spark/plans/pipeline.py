@@ -3,12 +3,16 @@
 Reproduces ``CryptoPipeline.run_pipeline_single``
 (``crypto_pipeline.py:160-265,352-370``), where the reference
 materializes a pandas frame between every stage. Here each symbol is
-one wave: every dataset is first built as a lazy plan (source → clean →
-[normalize] → [resample] → split), so Catalyst optimizes across stage
-boundaries, and then every action of the symbol — the validation
-report, each sink write, the metadata aggregate — is submitted at once
-and runs concurrently. The row counts of the result ride on the writes
-as observed metrics instead of separate count jobs.
+one wave: the staged cleaning frame and the cleaned (and normalized)
+frame are pinned as lazy local checkpoints, every dataset is built as a
+lazy plan over the cleaned pin ([resample] → split), and then every
+action of the symbol — the validation report, each sink write, the
+metadata aggregate — is submitted at once and runs concurrently. The
+pins are released when the wave ends. Each action's plan starts from a
+pin's one ``LogicalRDD`` leaf, so no action re-optimizes the cleaning
+lineage and nothing enters the session CacheManager. The row counts of
+the result ride on the writes as observed metrics instead of separate
+count jobs.
 
 Config mirrors ``PipelineConfig`` defaults + file + overrides
 (``pipelines/config_manager.py:17-89``): the typed dataclass below is
@@ -20,8 +24,9 @@ provides the defaults → env → JSON deep-merge front door
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass, field, replace
 from functools import partial
 
@@ -99,38 +104,41 @@ def run_pipeline_single(
 
     Returns the reference's result dict shape
     (``crypto_pipeline.py:480-489``): dataset names → row counts, plus
-    written paths. Every dataset is built as a lazy plan first; then the
-    report, the sink writes and the metadata aggregate run as one
-    concurrent wave. A written dataset's count is observed on its first
-    write; without sinks, each count the split arithmetic cannot give
-    is one count job. The staged and the cleaned frame are persisted
-    for the wave and released when it ends, also when it fails.
+    written paths. The staged and the cleaned frame are pinned as lazy
+    local checkpoints and every dataset is built as a lazy plan over the
+    cleaned pin; then the report, the sink writes and the metadata
+    aggregate run as one concurrent wave, whose first action stores each
+    pin's rows for the rest. A written dataset's count is observed on
+    its first write; without sinks, each count the split arithmetic
+    cannot give is one count job. Both pins are released when the wave
+    ends, also when it fails.
     """
     if config.split_method not in _SPLITS:
         raise ValueError(f"unknown split_method {config.split_method!r}")
     for fmt in config.output_formats:
         if fmt not in _WRITERS:
             raise ValueError(f"unknown output format {fmt!r}")
-    persisted: list[DataFrame] = []
-    try:
+    with ExitStack() as pins:
         # ONE staged frame (every cleaning stage's flags and values, one
         # row per input row) feeds the report and the cleaned frame; the
         # cleaned (and normalized) frame feeds every dataset and the
         # metadata, so the normalize aggregate runs once per symbol.
-        staged = cleaning.stage_ohlcv(
-            source,
-            mode=config.clean_mode,
-            price_tolerance=config.price_tolerance,
-            impute_method=config.impute_method,
-        ).persist()
-        persisted.append(staged)
+        staged = pins.enter_context(
+            pin(
+                cleaning.stage_ohlcv(
+                    source,
+                    mode=config.clean_mode,
+                    price_tolerance=config.price_tolerance,
+                    impute_method=config.impute_method,
+                )
+            )
+        )
         cleaned = cleaning.cleaned_from_staged(staged)
         if config.normalize_method:
             cleaned = norm.normalize(
                 cleaned, config.normalize_cols, method=config.normalize_method
             )
-        cleaned = cleaned.persist()
-        persisted.append(cleaned)
+        cleaned = pins.enter_context(pin(cleaned))
         datasets = _datasets(cleaned, config)
 
         result: dict = {"symbol": symbol, "datasets": {}, "paths": {}}
@@ -171,9 +179,6 @@ def run_pipeline_single(
             )
 
         done = _wave(spark, actions)
-    finally:
-        for df in persisted:
-            df.unpersist()
 
     if config.include_report:
         result["validation_report"] = done["validation_report"]
@@ -190,6 +195,41 @@ def run_pipeline_single(
     if "metadata" in done:
         result["metadata"] = done["metadata"]
     return result
+
+
+@contextmanager
+def pin(df: DataFrame) -> Iterator[DataFrame]:
+    """``df`` as a lazy local checkpoint for the ``with`` block, released
+    when the block exits, also on an exception. A plan over the pin
+    starts from one ``LogicalRDD`` leaf: no action re-optimizes the
+    lineage behind it, and the first action stores its rows for the
+    others. Unlike ``persist()``, nothing enters the session
+    CacheManager. Under AQE the lineage's shuffle stages run on entry.
+
+    The pin is planned as the CacheManager plans a cached frame: in a
+    session clone without AQE's final-stage shuffle optimizations, so
+    it keeps the partitions a ``persist()`` keeps, and with them every
+    partition-dependent result (``randomSplit`` seeds each partition by
+    its index). The pin must not be read after the block."""
+    spark = df.sparkSession
+    planner = spark._jsparkSession.cloneSession()
+    planner.conf().set(
+        "spark.sql.adaptive.applyFinalStageShuffleOptimizations", "false"
+    )
+    of_rows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
+    # ``source``'s plan owns the SQL metrics that the tasks computing the
+    # pin report to; it stays referenced until the release, so that no
+    # concurrent action reports to a metric the JVM has already collected
+    source = of_rows(planner, df._jdf.logicalPlan())
+    pinned = of_rows(
+        spark._jsparkSession, source.localCheckpoint(False).logicalPlan()
+    )
+    try:
+        yield DataFrame(pinned, spark)
+    finally:
+        # drop the stored blocks now, not when the ContextCleaner
+        # collects the RDD after a driver GC
+        pinned.queryExecution().logical().rdd().unpersist(False)
 
 
 def _datasets(cleaned: DataFrame, config: PipelineConfig) -> dict[str, DataFrame]:

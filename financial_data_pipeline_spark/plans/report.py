@@ -9,8 +9,8 @@ builds ONE staged frame — one row per input row, each cleaning stage's
 flags and values as columns — and this module only aggregates it.
 ``clean_ohlcv`` is the same frame filtered to its surviving rows, so
 the report cannot drift from the cleaning it describes, and a caller
-that wants both (``plans.pipeline``) persists the staged frame once
-and derives both from it (:func:`staged_report`).
+that wants both (``plans.pipeline``) pins the staged frame once and
+derives both from it (:func:`staged_report`).
 
 Counter → staged column (see ``stage_ohlcv`` for the columns):
 
@@ -216,7 +216,7 @@ def validation_report(
 def staged_report(staged: DataFrame) -> dict:
     """:func:`validation_report`, with its default report arguments, of
     a ``cleaning.stage_ohlcv`` frame the caller already built (and
-    persisted); the cleaning arguments are those it was staged with."""
+    pinned); the cleaning arguments are those it was staged with."""
     return _as_dict(_counters(staged).first())
 
 

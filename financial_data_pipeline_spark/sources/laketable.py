@@ -44,6 +44,7 @@ only for Bloom columns or footers without exact statistics.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
@@ -283,8 +284,8 @@ def _footer_stats(
     out = []
     for path in files:
         try:
-            md = pq.ParquetFile(path).metadata
-            arrow_schema = pq.read_schema(path)
+            with pq.ParquetFile(path) as pf:  # one footer parse per file
+                md, arrow_schema = pf.metadata, pf.schema_arrow
         except Exception:  # noqa: BLE001 — any read oddity → Spark job
             return None
         pq_schema = md.schema
@@ -325,6 +326,18 @@ def _footer_stats(
             stats[f"__nulls_{c}"] = int(nulls)
         out.append(FileStat(path=path, rows=rows, stats=stats))
     return out
+
+
+def _remove_part(path: str) -> None:
+    """Delete a data file with its Hadoop checksum sidecar (first, so
+    a crash in between leaves the part for the next vacuum to find),
+    then its commit dir once that holds nothing else."""
+    d, name = os.path.split(path)
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(os.path.join(d, f".{name}.crc"))
+    os.remove(path)
+    with contextlib.suppress(OSError):  # not empty: other parts live
+        os.rmdir(d)
 
 
 def _collect_stats(
@@ -615,7 +628,10 @@ class LakeTable:
     def _write_files(self, df: DataFrame) -> list[FileStat]:
         """Land an immutable parquet file set and return its stats."""
         data_dir = os.path.join(self.root, f"commit-{uuid.uuid4().hex[:12]}")
-        df.write.mode("error").parquet(data_dir)
+        # the manifest is the commit point: no Hadoop _SUCCESS marker
+        df.write.mode("error").option(
+            "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+        ).parquet(data_dir)
         files = [
             os.path.join(data_dir, p)
             for p in os.listdir(data_dir)
@@ -997,8 +1013,6 @@ class LakeTable:
         is one anti-join of the touched files against the update keys,
         union, write — old files stay on disk for time travel.
         """
-        from pyspark.sql import functions as F
-
         k0 = key_cols[0]
         if k0 not in self.stat_cols:
             raise ValueError(
@@ -1010,8 +1024,9 @@ class LakeTable:
         self._check_schema_compat(updates)
         self._enforce_constraints(updates)
         touched, carried = self._split_by_key_range(base, updates, k0)
+        # duplicate keys do not change a left-anti join: no distinct
         return self._rewrite_keyed(
-            updates.select(*key_cols).distinct(),
+            updates.select(*key_cols),
             key_cols,
             updates,
             "merge",
@@ -1227,7 +1242,7 @@ class LakeTable:
             # filesystem Spark wrote them to (not the metadata seam)
             for fs in snaps[v].files if snaps[v] is not None else []:
                 if fs.path not in live and os.path.exists(fs.path):
-                    os.remove(fs.path)
+                    _remove_part(fs.path)
                     _FILE_SCHEMA_MEMO.pop(fs.path, None)
                     deleted.append(fs.path)
                     self._fault("expire:mid_data_delete")

@@ -141,6 +141,31 @@ def test_expire_snapshots_reclaims_only_dead_files(spark, table):
         assert os.path.exists(p)
 
 
+def test_expire_leaves_only_live_parts_and_metadata(spark, table):
+    """commit → merge → expire(keep_last=1): what stays under the table
+    root is HEAD's parts, each one's checksum sidecar, and the manifest
+    dir — no commit marker, no orphaned sidecar, no emptied commit dir."""
+    import os
+
+    table.commit(_batch(spark, 0, 2, "a"))  # both files hold days 0-1
+    table.merge(_batch(spark, 1, 2, "patched"), key_cols=["day", "value"])
+    assert table.expire_snapshots(keep_last=1)
+    live = set(table.pruned_files())
+    allowed = live | {
+        os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.crc")
+        for p in live
+    }
+    dirs = set()
+    for dirpath, dirnames, filenames in os.walk(table.root):
+        dirnames[:] = [d for d in dirnames if d != "_manifests"]
+        if dirpath != table.root:
+            dirs.add(dirpath)
+        for fn in filenames:
+            assert os.path.join(dirpath, fn) in allowed, fn
+    assert dirs == {os.path.dirname(p) for p in live}
+    assert table.read().count() == 200
+
+
 def test_delete_removes_keys_and_prunes_untouched(spark, table):
     table.commit(_batch(spark, 0, 2, "a"))   # days 0-1
     table.commit(_batch(spark, 4, 6, "b"))   # days 4-5

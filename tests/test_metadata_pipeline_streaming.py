@@ -14,9 +14,11 @@ from financial_data_pipeline_spark.metadata import (
     metadata_table,
     sha256_file,
 )
+from financial_data_pipeline_spark.operators import cleaning
 from financial_data_pipeline_spark.operators.resample import resample_ohlcv
 from financial_data_pipeline_spark.plans.pipeline import (
     PipelineConfig,
+    pin,
     run_pipeline,
     run_pipeline_single,
 )
@@ -259,9 +261,62 @@ def test_observed_counts_are_exact(spark, tmp_path, split):
     )
     assert bare["datasets"] == d and bare["paths"] == {}
     # the parent's actions: the report, one count per resample, plus the
-    # split counts (chronological: none, random: one, by_time: two)
+    # split counts (chronological: none, random: one, by_time: two), and
+    # the two pins (the staged and the cleaned frame), whose shuffle
+    # stages run at pin time under AQE as one root execution each
     split_counts = {"chronological": 0, "random": 1, "by_time": 2}[split]
-    assert len(_root_executions(spark, mark)) <= 1 + 2 + split_counts
+    assert len(_root_executions(spark, mark)) <= 1 + 2 + split_counts + 2
+
+
+def test_symbol_wave_reads_pins_not_the_cache(spark, tmp_path):
+    """A successful symbol plans its report, datasets and metadata
+    over released local checkpoints: no root execution scans the
+    session cache, the CacheManager stays empty and the persistent-RDD
+    set is back at its baseline when the call returns."""
+    source = synthetic.synthetic_ohlcv(
+        spark, ["BTCUSDT"], "2025-01-01", "2025-01-02", 60, seed=5
+    ).drop("hour", "day_of_week", "month", "year")
+    cfg = PipelineConfig(
+        normalize_method="zscore",
+        resample_to=["4h"],
+        output_dir=str(tmp_path),
+    )
+    spark.catalog.clearCache()
+    before = _persistent_rdds(spark)
+    mark = max((i for i, _ in _root_executions(spark)), default=-1)
+    res = run_pipeline_single(spark, cfg, source, "BTCUSDT")
+    plans = [p for _, p in _root_executions(spark, mark)]
+    assert res["datasets"]["full"] > 0 and "metadata" in res
+    assert plans and not any("InMemoryTableScan" in p for p in plans)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert _persistent_rdds(spark) == before
+
+
+def test_pin_keeps_the_partitions_a_persist_keeps(spark, tmp_path):
+    """``randomSplit`` seeds each partition by its index, so a pin keeps
+    the partitions a ``persist()`` keeps (AQE coalesces the final stage
+    of neither) and both split the same rows."""
+    synthetic.synthetic_ohlcv(
+        spark, ["BTCUSDT"], "2025-01-01", "2025-01-03", 60, seed=9
+    ).write.parquet(str(tmp_path / "bars"))
+
+    def staged():
+        # a fresh plan per call (a planned frame keeps its partitions);
+        # read back, the symbol is no literal, so the windows shuffle
+        return cleaning.stage_ohlcv(spark.read.parquet(str(tmp_path / "bars")))
+
+    def first_half(frame):
+        half = frame.randomSplit([0.5, 0.5], seed=3)[0]
+        return sorted(r.timestamp for r in half.select("timestamp").collect())
+
+    cached = staged().persist()
+    try:
+        want, parts = first_half(cached), cached.rdd.getNumPartitions()
+    finally:
+        cached.unpersist()
+    with pin(staged()) as pinned:
+        assert pinned.rdd.getNumPartitions() == parts > 1
+        assert first_half(pinned) == want
 
 
 def test_observed_counts_of_a_fully_dirty_input_are_zero(spark, tmp_path):
